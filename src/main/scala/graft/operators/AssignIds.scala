@@ -25,10 +25,6 @@ import org.apache.spark.sql.types.LongType
   */
 object AssignIds {
 
-  /** `df` with an extra `idCol` column holding 1-based contiguous ids in
-    * `order`. One range exchange + per-partition sort; no global sort on
-    * a single task anywhere.
-    */
   /** The distributed layout stage: globally range-ordered, sorted within
     * each partition — N-way parallel, never a single-partition sort.
     * Exposed so plan guards can assert the shape (the zipWithIndex seam
@@ -37,16 +33,22 @@ object AssignIds {
   private[graft] def layout(df: DataFrame, order: Seq[Column]): DataFrame =
     df.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
 
-  /** The laid-out frame is persisted INSIDE the operator (r18):
+  /** `df` with an extra `idCol` column holding 1-based contiguous ids in
+    * `order`. One range exchange + per-partition sort; no global sort on
+    * a single task anywhere.
+    *
+    * The laid-out frame is persisted INSIDE the operator (r18):
     * zipWithIndex runs an extra count job and then the main pass, so an
     * unpersisted input paid the range exchange + in-partition sort (and
     * the whole upstream plan) TWICE — every consumer did, layout_prune
-    * three times over. The cache also upgrades the old caveat ("a
+    * three times over. The cache also narrows the old caveat ("a
     * non-deterministic upstream could disagree between the two jobs and
-    * yield duplicate/skipped ids") from a caller obligation into a
-    * structural guarantee: both jobs read one materialization. The
-    * temporary is released by the bench janitor / session teardown,
-    * the PrefixSum precedent.
+    * yield duplicate/skipped ids"): normally both jobs read one
+    * materialization, but `persist` is best-effort — blocks lost with an
+    * executor are recomputed, and a non-deterministic upstream can then
+    * still diverge between the jobs, so a deterministic `df` remains the
+    * caller's obligation. The temporary is released by the bench janitor
+    * / session teardown, the PrefixSum precedent.
     */
   def byOrder(df: DataFrame, order: Seq[Column], idCol: String): DataFrame = {
     val spark = df.sparkSession

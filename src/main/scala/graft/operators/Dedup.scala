@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{Djb2, TextFns, VectorFns}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Large-scale deduplication operators for the LLM-data-pipeline tier
@@ -467,8 +467,9 @@ object Dedup {
     * needed = graph diameter (near-dup clusters are near-cliques, so 2-3
     * in practice, never more than O(log n) with the pair lists LSH
     * produces). The driver only coordinates round boundaries — all data
-    * work is distributed; intermediates are persisted and released per
-    * round so lineage stays O(1). (GraphX/Pregel is the same loop; plain
+    * work is distributed; each round is one [[Iterate]] checkpoint whose
+    * change count is an observed metric, released when superseded, so
+    * lineage stays O(1). (GraphX/Pregel is the same loop; plain
     * DataFrames keep it Catalyst-optimized and dependency-free.)
     */
   def connectedComponents(pairs: DataFrame, idCol1: String = "id1",
@@ -482,42 +483,29 @@ object Dedup {
     edges.count() // materialize edges, then the pair cache can go
     p0.unpersist()
     try {
-      // each round MUST truncate lineage (eager localCheckpoint), not just
-      // cache: the logical plan otherwise doubles per round (labels is
-      // referenced twice) and the 2^rounds plan tree OOMs the driver long
-      // before the data does. On a cluster with an unreliable driver disk,
-      // reliable checkpoint() to the shared FS is the drop-in equivalent.
-      var chk = edges.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")).localCheckpoint()
-      var labels = chk
-      var changed = 1L
-      var iter = 0
-      while (changed > 0 && iter < maxIter) {
+      // each round MUST truncate lineage (the [[Iterate]] checkpoint), not
+      // just cache: the logical plan otherwise doubles per round (labels
+      // is referenced twice) and the 2^rounds plan tree OOMs the driver
+      // long before the data does. The round carries the previous label
+      // through the checkpoint, so the change count is an observed
+      // metric of the same job instead of a second labels join.
+      val labels0 = edges.select(col("src").as("id")).distinct()
+        .withColumn("label", col("id"))
+      val res = Iterate(Iterate.Round(labels0, Row.empty), maxIter,
+          metrics = Seq(count(when(col("label") =!= col("prev"), 1))),
+          stop = (_, cur) => cur.long == 0) { (prev, _) =>
+        val labels = prev.frame.select(col("id"), col("label"))
         val nbrMin = edges
           .join(labels.withColumnRenamed("id", "src"), "src")
           .groupBy(col("dst").as("id")).agg(min(col("label")).as("nbr_label"))
-        // carry the previous label through the checkpoint: the change
-        // count then reads the materialized round instead of paying a
-        // second labels join per round
-        // lazy checkpoint: the convergence count below materializes it,
-        // so each round is ONE job (eager + count was two); the plan is
-        // truncated identically once materialized
-        val next = labels.join(nbrMin, Seq("id"), "left")
+        labels.join(nbrMin, Seq("id"), "left")
           .select(col("id"),
             least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"),
             col("label").as("prev"))
-          .localCheckpoint(false)
-        changed = next.filter(col("label") =!= col("prev")).count()
-        // release the previous round's checkpoint BLOCKS (Dataset
-        // .unpersist would be a no-op here — local checkpoints live as
-        // persisted RDD blocks, not SQL-cache entries)
-        org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(chk)
-        chk = next
-        labels = next.select(col("id"), col("label"))
-        iter += 1
       }
-      require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
-      labels
+      if (!res.converged) org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(res.frame)
+      require(res.converged, s"connectedComponents did not converge in $maxIter rounds")
+      res.frame.select(col("id"), col("label"))
     } finally edges.unpersist()
   }
 
@@ -541,7 +529,7 @@ object Dedup {
     * Both are one groupBy + one equi-join — shuffle-bounded, skew-safe
     * (a giant star's hub row aggregates, never materializes a list).
     * Convergence: the edge multiset is a fixpoint of both steps; checked
-    * with a count + unordered hash-sum (collision odds ~2^-64 per
+    * with a count + unordered hash-xor (collision odds ~2^-64 per
     * round; at the fixpoint edges are exactly (member, root) stars).
     */
   def connectedComponentsStar(pairs: DataFrame, idCol1: String = "id1",
@@ -573,39 +561,29 @@ object Dedup {
         .distinct()
     }
 
-    // bit_xor, not sum: order-independent over the DISTINCT edge set and
-    // cannot overflow (ANSI mode makes a summed-hash fingerprint a hard
-    // error at scale)
-    def fingerprint(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(src, dst))")).collect().head
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-
-    var edges = smallStar(largeStar(p0)).localCheckpoint()
-    var fp = fingerprint(edges)
-    var iter = 1
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
-      val nfp = fingerprint(next)
-      // The fingerprint is a cheap screen; on a match, confirm the
-      // fixpoint EXACTLY once (counts already equal via the fingerprint
-      // and both sides are distinct sets, so a one-sided empty except is
-      // set equality) — a ~2^-64 hash collision would otherwise
-      // terminate early with silently wrong clusters.
-      converged = nfp == fp && next.except(edges).isEmpty
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(edges)
-      edges = next
-      fp = nfp
-      iter += 1
+    // fingerprint (count, bit_xor of edge hashes), observed on each
+    // round's checkpoint job. bit_xor, not sum: order-independent over
+    // the DISTINCT edge set and cannot overflow (ANSI mode makes a
+    // summed-hash fingerprint a hard error at scale). The init round's
+    // -1 count never matches, so round 1 always runs on.
+    val fingerprint = Seq(count(lit(1)), expr("bit_xor(xxhash64(src, dst))"))
+    // The fingerprint is a cheap screen; on a match, confirm the
+    // fixpoint EXACTLY once (counts already equal via the fingerprint
+    // and both sides are distinct sets, so a one-sided empty except is
+    // set equality) — a ~2^-64 hash collision would otherwise
+    // terminate early with silently wrong clusters.
+    val res = Iterate(Iterate.Round(p0, Row(-1L, 0L)), maxIter, fingerprint,
+        stop = (prev, cur) => cur.metric == prev.metric && cur.frame.except(prev.frame).isEmpty) {
+      (prev, _) => smallStar(largeStar(prev.frame))
     }
     p0.unpersist()
-    if (!converged) {
+    if (!res.converged) {
       // release the final round's checkpoint blocks on the failure path too
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(edges)
+      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(res.frame)
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxIter rounds")
     }
+    val edges = res.frame
     // fixpoint edges are (member, root) stars; roots label themselves
     edges.select(col("src").as("id"), col("dst").as("label"))
       .union(edges.select(col("dst").as("id"), col("dst").as("label")))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Fixed-iteration PageRank in BIGINT fixed-point arithmetic.
@@ -28,35 +28,24 @@ import org.apache.spark.sql.functions._
   * Iteration mechanics: unlike [[Dedup.connectedComponents]] (whose
   * label table feeds each round twice — join + change count — doubling
   * the plan per round), the rank table appears exactly once per round,
-  * so the plan grows LINEARLY and short runs execute as one AQE query;
-  * `checkpointEvery` bounds driver-side plan depth on long runs, with
-  * previous-round block release. Per round the cost is one join + one
-  * aggregate — and with the degree pre-join + dst-partitioned edge
-  * cache + size-gated rank broadcast below, the round collapses to
-  * scan + project + aggregate with no exchange at all (the Pregel
-  * shape, declared in DataFrames so AQE still re-plans skew when the
-  * graph outgrows the broadcast gate).
+  * so the un-checkpointed plan grows LINEARLY and short fixed-iteration
+  * runs are best left as one query: AQE then sees every round's shuffle
+  * statistics and broadcast-converts the rank side of each join at
+  * runtime (a localCheckpoint would erase those stats and force
+  * sort-merge joins). Long runs still need truncation — driver-side
+  * plan/optimizer cost per round grows with depth — so `run` fuses
+  * [[RoundsPerCheckpoint]] rounds into each [[Iterate]] round (one
+  * checkpoint per block, previous block released), not checkpoint-always.
+  * Per round the cost is one join + one aggregate — and with the degree
+  * pre-join + dst-partitioned edge cache + size-gated rank broadcast
+  * below, the round collapses to scan + project + aggregate with no
+  * exchange at all (the Pregel shape, declared in DataFrames so AQE
+  * still re-plans skew when the graph outgrows the broadcast gate).
   */
 object PageRank {
 
   val Scale = 1000000000000L // 1e12: rank 1.0 in fixed-point
 
-  /** edges: (src: BIGINT, dst: BIGINT), already symmetrized if the graph
-    * is undirected; every node must appear as a src (guaranteed for
-    * symmetrized graphs — dangling-node mass handling is out of scope
-    * and rejected loudly below). Returns (node, r) after `iters` rounds.
-    *
-    * Lineage: unlike connectedComponents (whose label table feeds each
-    * round TWICE — join + change count — doubling the plan per round),
-    * the rank table appears exactly once per round, so the un-checkpointed
-    * plan grows LINEARLY and short fixed-iteration runs are best left as
-    * one query: AQE then sees every round's shuffle statistics and
-    * broadcast-converts the rank side of each join at runtime (a
-    * localCheckpoint would erase those stats and force sort-merge joins).
-    * Long runs still need truncation — driver-side plan/optimizer cost
-    * per round grows with depth — hence `checkpointEvery` (with block
-    * release of the previous checkpoint), not checkpoint-always.
-    */
   /** Rank tables below this node count ride a broadcast each round (24 B
     * a row ⇒ ~120 MB at the limit); larger graphs fall back to a shuffle
     * join. The gate is on the MEASURED node count — never a blind hint
@@ -64,14 +53,22 @@ object PageRank {
     */
   val BroadcastNodeLimit = 5000000L
 
-  /** `seed`: None = standard PageRank (uniform 15% jump to every node);
+  /** PageRank rounds fused into one checkpointed [[Iterate]] round. */
+  private val RoundsPerCheckpoint = 8
+
+  /** edges: (src: BIGINT, dst: BIGINT), already symmetrized if the graph
+    * is undirected; every node must appear as a src (guaranteed for
+    * symmetrized graphs — dangling-node mass handling is out of scope
+    * and rejected loudly below). Returns (node, r) after `iters` rounds.
+    *
+    * `seed`: None = standard PageRank (uniform 15% jump to every node);
     * Some(v) = PERSONALIZED PageRank — all initial mass and all restart
     * mass concentrate on `v`, so ranks measure proximity to the seed
     * (random walk with restart). Same integer lattice, same iteration
     * mechanics; total mass is bounded by one node's worth (≤ scale), so
     * the overflow notches are if anything conservative.
-    */
-  /** `prebuilt`: optionally the (degree table (src, d), degree-pre-joined
+    *
+    * `prebuilt`: optionally the (degree table (src, d), degree-pre-joined
     * dst-partitioned edge table (src, dst, d)) pair, when the caller
     * maintains them as materialized artifacts shared across several
     * seeded/unseeded runs over one graph (the Bench/production posture —
@@ -79,12 +76,11 @@ object PageRank {
     * When supplied they are caller-owned: `run` neither persists nor
     * unpersists them.
     */
-  def run(edges: DataFrame, iters: Int, checkpointEvery: Int = 8,
+  def run(edges: DataFrame, iters: Int,
       validate: Boolean = true, scale: Long = Scale,
       seed: Option[Long] = None,
       prebuilt: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    require(checkpointEvery >= 1)
     require(scale >= 1000000L, "scale below 1e6 leaves too little rank resolution")
     val ownsArtifacts = prebuilt.isEmpty
     val deg = prebuilt.map(_._1).getOrElse(
@@ -124,36 +120,32 @@ object PageRank {
       require(dangling == 0, s"$dangling dangling edges (dst never src): symmetrize first")
     }
     val small = nNodes <= BroadcastNodeLimit
-    var chk: Option[DataFrame] = None
     val jumpCol = seed match {
       case None => lit(jump)
       case Some(sd) => when(col("dst") === sd, jump).otherwise(0L)
     }
-    var r = deg.select(col("src").as("node"), (seed match {
+    val r0 = deg.select(col("src").as("node"), (seed match {
       case None => lit(eff)
       case Some(sd) => when(col("src") === sd, eff).otherwise(0L)
     }).as("r"))
+    def round(r: DataFrame): DataFrame = {
+      val ranks = r.withColumnRenamed("node", "src")
+      e2.join(if (small) broadcast(ranks) else ranks, "src")
+        .select(col("dst"), expr("r div d").as("contrib"))
+        .groupBy(col("dst"))
+        .agg(sum(col("contrib")).as("c"))
+        .select(col("dst").as("node"), (jumpCol + expr("(85 * c) div 100")).as("r"))
+    }
+    // the final block always checkpoints: the returned frame must not
+    // depend on e2/deg, which the finally below unpersists before the
+    // caller ever executes the (lazy) result. Each eager checkpoint runs
+    // its block's linear plan as ONE AQE query.
+    val blocks = (iters + RoundsPerCheckpoint - 1) / RoundsPerCheckpoint
     try {
-      for (i <- 1 to iters) {
-        val ranks = r.withColumnRenamed("node", "src")
-        r = e2.join(if (small) broadcast(ranks) else ranks, "src")
-          .select(col("dst"), expr("r div d").as("contrib"))
-          .groupBy(col("dst"))
-          .agg(sum(col("contrib")).as("c"))
-          .select(col("dst").as("node"),
-            (jumpCol + expr("(85 * c) div 100")).as("r"))
-        // the FINAL round always checkpoints: the returned frame must not
-        // depend on e2/deg, which the finally below unpersists before the
-        // caller ever executes the (lazy) result. The eager checkpoint
-        // runs the whole linear plan as ONE AQE query first.
-        if ((i % checkpointEvery == 0 && i < iters) || i == iters) {
-          val next = r.localCheckpoint()
-          chk.foreach(org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint)
-          chk = Some(next)
-          r = next
-        }
-      }
-      r
+      Iterate(Iterate.Round(r0, Row.empty), blocks) { (prev, b) =>
+        val n = math.min(RoundsPerCheckpoint, iters - (b - 1) * RoundsPerCheckpoint)
+        (1 to n).foldLeft(prev.frame)((r, _) => round(r))
+      }.frame
     } finally if (ownsArtifacts) { e2.unpersist(); deg.unpersist() }
   }
 }

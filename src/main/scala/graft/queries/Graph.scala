@@ -1,8 +1,8 @@
 package graft.queries
 
-import graft.operators.PageRank
+import graft.operators.{Iterate, PageRank}
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over the star schema's implicit graphs. Connected
@@ -144,7 +144,7 @@ object Graph {
   def bfsHops(s: SparkSession, d: String): DataFrame = {
     val edges = edgeTable(s, d)
     val (seed, nNodes) = hubSeedAndNodes(s, d)
-    var dist = degreeTable(s, d).filter(col("src") === seed)
+    val seedRow = degreeTable(s, d).filter(col("src") === seed)
       .select(col("src").as("node"), lit(0L).as("hop"))
     // r18: two changes to the round mechanics.
     // (1) The edge list is augmented with a zero-increment SELF-LOOP
@@ -162,8 +162,7 @@ object Graph {
     //     the reached count stops growing — or covers every node of the
     //     graph (the cached nNodes scalar) — the remaining declared
     //     rounds are provably the identity and never launch. The count
-    //     rides each checkpoint job as an observed metric (the
-    //     hits_scores pattern: no extra job for the scalar).
+    //     is the round's observed metric ([[Iterate]]: no extra job).
     // declared dst layout (the hits_scores/communities_lpa trick, same
     // round): each round joins the broadcast frontier on src and
     // aggregates by dst — with the augmented edge list checkpointed
@@ -176,27 +175,15 @@ object Graph {
         .repartition(nPart, col("dst")),
       nPart, "dst")
     val small = nNodes <= graft.operators.PageRank.BroadcastNodeLimit
-    var prev: Option[DataFrame] = None
-    var prevCount = 1L // the seed row
-    var r = 0
-    var converged = false
-    while (r < 4 && !converged) {
-      val distSrc = dist.withColumnRenamed("node", "src")
-      val obs = org.apache.spark.sql.Observation()
-      val updated = edges2.join(if (small) broadcast(distSrc) else distSrc, "src")
+    val dist = Iterate(Iterate.Round(seedRow, Row(1L)), maxRounds = 4,
+        metrics = Seq(count(lit(1))),
+        stop = (prev, cur) => cur.long == prev.long || cur.long == nNodes) { (prev, _) =>
+      val distSrc = prev.frame.withColumnRenamed("node", "src")
+      edges2.join(if (small) broadcast(distSrc) else distSrc, "src")
         .select(col("dst").as("node"),
           (col("hop") + when(col("dst") === col("src"), 0L).otherwise(1L)).as("hop"))
         .groupBy(col("node")).agg(min(col("hop")).as("hop"))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      val c = obs.get.apply("n").asInstanceOf[Long]
-      converged = c == prevCount || c == nNodes
-      prevCount = c
-      prev.foreach(org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint)
-      prev = Some(updated)
-      dist = updated
-      r += 1
-    }
+    }.frame
     dist.groupBy(col("hop")).agg(count(lit(1)).as("n_nodes")).orderBy(col("hop"))
   }
 
@@ -320,8 +307,8 @@ object Graph {
     * on the symmetrized graph mixes the two roles). 3 fixed rounds on
     * the integer lattice: scores start at 1e6, each half-round is one
     * join + sum aggregate, and normalization divides by the round's
-    * max (exact integer div; the max is a collected driver scalar —
-    * the kmeans-model posture, 6 tiny jobs total). Deterministic,
+    * max (exact integer div; the max is each half-round's observed
+    * metric — the kmeans-model posture, 6 tiny jobs total). Deterministic,
     * shuffle-bounded, rounds O(1); DuckDB unrolls the same 3 rounds.
     * Output: top-20 hubs + top-20 authorities.
     */
@@ -346,11 +333,8 @@ object Graph {
     // (guide §2.4, the PageRank dst-partitioned-edges trick applied to
     // the mutual recursion). Six aggregate exchanges become two builds.
     // explicit partition count (configured shuffle parallelism — stays
-    // scale-adaptive): a count-less repartition is AQE-coalescible, so
-    // the cached layout's partitioning would be unknown at planning
-    // time and every half-round's aggregate would re-exchange (the
-    // communities_lpa lesson, same round)
-    // declared-partitioning checkpoints (Bridge): persist/plain
+    // scale-adaptive) and declared-partitioning checkpoints (Bridge):
+    // a count-less repartition is AQE-coalescible, and persist/plain
     // checkpoint both report UNKNOWN partitioning under AQE at planning
     // time, so every half-round's aggregate re-exchanged anyway (the
     // communities_lpa lesson, same round)
@@ -359,47 +343,40 @@ object Graph {
       sp.repartition(nPart, col("pk")), nPart, "pk")
     val spSk = org.apache.spark.sql.graft.Bridge.localCheckpointHashPartitioned(
       sp.repartition(nPart, col("sk")), nPart, "sk")
-    // init score tables read the degree artifact's key column split at
-    // the part offset (every supplier and part appears as a src of the
-    // symmetrized edge table) — the two init distinct jobs disappear
-    var h = degreeTable(s, d).filter(col("src") < PartOffset)
-      .select(col("src").as("sk")).withColumn("h", lit(1000000L))
-    var a = degreeTable(s, d).filter(col("src") >= PartOffset)
-      .select((col("src") - PartOffset).as("pk")).withColumn("a", lit(1000000L))
-    for (_ <- 1 to 3) {
-      // localCheckpoint per half-round: without it each round's
-      // max-collect re-executes the whole prior chain and the final
-      // top-20 replays everything again — measured 14.9 s vs ~1 s at
-      // sf0.1. The round max rides the SAME job as an observed metric
-      // (CollectMetrics is a row no-op) — the query is job-count-bound
-      // (round-16 GraphProfile: ~0.7 s per job on a quiet host is pure
-      // scheduling floor), so a separate max job per half-round doubled
-      // the fixed cost for a 1-row scalar.
-      // r18: normalization divides by a 1-row broadcast COLUMN instead
-      // of interpolating the collected max as a literal — the per-round
-      // plans become textually identical, so whole-stage codegen
-      // compiles each half-round's stage once and every later round
-      // hits the generated-code cache (a fresh janino compile per
-      // half-round was pure fixed cost).
-      val obsA = org.apache.spark.sql.Observation()
-      val a0 = spPk.join(bc(h), "sk").groupBy(col("pk")).agg(sum(col("h")).as("a0"))
-        .observe(obsA, max(col("a0")).as("mx"))
-        .localCheckpoint()
-      val am = obsA.get.apply("mx").asInstanceOf[Long] // 1-row scalar, same job
-      a = a0.crossJoin(broadcast(Seq(am).toDF("am")))
-        .select(col("pk"), expr("(a0 * 1000000) div am").as("a"))
-      val obsH = org.apache.spark.sql.Observation()
-      val h0 = spSk.join(bc(a), "pk").groupBy(col("sk")).agg(sum(col("a")).as("h0"))
-        .observe(obsH, max(col("h0")).as("mx"))
-        .localCheckpoint()
-      val hm = obsH.get.apply("mx").asInstanceOf[Long] // 1-row scalar, same job
-      h = h0.crossJoin(broadcast(Seq(hm).toDF("hm")))
-        .select(col("sk"), expr("(h0 * 1000000) div hm").as("h"))
-    }
-    h.select(lit("hub").as("kind"), col("sk").as("id"), col("h").as("score"))
+    // the init hub table reads the degree artifact's key column split at
+    // the part offset (every supplier appears as a src of the symmetrized
+    // edge table) — no init distinct job
+    val h1 = degreeTable(s, d).filter(col("src") < PartOffset)
+      .select(col("src").as("sk"), lit(1000000L).as("score"))
+    // Six Iterate rounds = three HITS rounds: odd rounds are a-halves
+    // (pk, s), even rounds h-halves (sk, s), each the raw score sum s.
+    // The checkpoint truncates the chain (without it each round replays
+    // every prior one — measured 14.9 s vs ~1 s at sf0.1), and the
+    // half's max rides the SAME job as its observed metric: the query is
+    // job-count-bound (~0.7 s per job on a quiet host is pure scheduling
+    // floor), so a separate max job per half doubled the fixed cost for
+    // a 1-row scalar.
+    // r18: normalization divides by a 1-row broadcast COLUMN instead of
+    // interpolating the max as a literal — the per-round plans become
+    // textually identical, so whole-stage codegen compiles each half's
+    // stage once and later rounds hit the generated-code cache.
+    def normalized(r: Iterate.Round, key: String): DataFrame =
+      r.frame.crossJoin(broadcast(Seq(r.long).toDF("mx")))
+        .select(col(key), expr("(s * 1000000) div mx").as("score"))
+    // the output reads the final a- and h-half together: keep both
+    val Seq(aLast, hLast) = Iterate(Iterate.Round(h1, Row.empty), maxRounds = 6,
+        metrics = Seq(max(col("s"))), keep = 2) { (prev, r) =>
+      if (r % 2 == 1)
+        spPk.join(bc(if (r == 1) h1 else normalized(prev, "sk")), "sk")
+          .groupBy(col("pk")).agg(sum(col("score")).as("s"))
+      else
+        spSk.join(bc(normalized(prev, "pk")), "pk")
+          .groupBy(col("sk")).agg(sum(col("score")).as("s"))
+    }.kept
+    normalized(hLast, "sk").select(lit("hub").as("kind"), col("sk").as("id"), col("score"))
       .orderBy(col("score").desc, col("id")).limit(20)
-      .union(a.select(lit("authority").as("kind"), col("pk").as("id"),
-          col("a").as("score"))
+      .union(normalized(aLast, "pk")
+        .select(lit("authority").as("kind"), col("pk").as("id"), col("score"))
         .orderBy(col("score").desc, col("id")).limit(20))
       .orderBy(col("kind"), col("score").desc, col("id"))
   }
@@ -447,14 +424,6 @@ object Graph {
         .persist()
     })
 
-  /** Degree-oriented edge list of the co-purchase graph: each edge
-    * directed from its (degree, id)-smaller endpoint to the larger, as
-    * `(deg, id)` structs so array sort order IS orientation order. The
-    * orientation bounds every out-degree by O(√m) — the invariant that
-    * makes distributed triangle counting O(m^1.5) instead of Σdeg²
-    * (Suri & Vassilvitskii, WWW'11). Persisted artifact: both the
-    * wedge side and the closing side of [[triangleCount]] read it.
-    */
   /** Node degrees of the co-purchase graph — persisted artifact shared
     * by the triangle family (census, per-node coefficients) and
     * [[orientedEdges]]'s orientation pass: one union + groupBy over the
@@ -484,6 +453,14 @@ object Graph {
         .persist()
     })
 
+  /** Degree-oriented edge list of the co-purchase graph: each edge
+    * directed from its (degree, id)-smaller endpoint to the larger, as
+    * `(deg, id)` structs so array sort order IS orientation order. The
+    * orientation bounds every out-degree by O(√m) — the invariant that
+    * makes distributed triangle counting O(m^1.5) instead of Σdeg²
+    * (Suri & Vassilvitskii, WWW'11). Persisted artifact: both the
+    * wedge side and the closing side of [[triangleCount]] read it.
+    */
   def orientedEdges(s: SparkSession, d: String): DataFrame =
     orientedCache.getOrElseUpdate((s, d), {
       val e = copurchaseEdges(s, d)
@@ -594,19 +571,6 @@ object Graph {
       .orderBy(col("bucket"))
   }
 
-  /** Generic k-core peeling over a symmetric (src, dst) edge list:
-    * `rounds` synchronous rounds of "keep nodes with ≥ k surviving
-    * neighbors". The k-core is the unique maximal subgraph where every
-    * node has degree ≥ k, and synchronous peeling converges to it
-    * monotonically — so a FIXED round count is oracle-gateable exactly
-    * like communities_lpa, with the fixpoint (round R == round R−1)
-    * asserted by spec on the fixtures instead of run-till-converged
-    * nondeterminism. Each round is two co-partitioned joins + one count
-    * aggregate, shuffle-bounded; per-round EAGER localCheckpoint
-    * truncates the doubling lineage (the connectedComponents lesson —
-    * nodes feeds the next round twice), with each round's blocks
-    * released as the next materializes.
-    */
   /** Degree assortativity (Newman 2002) of the supplier↔part graph —
     * the one-number structural summary next to degree_histogram in the
     * graph-profile family: Pearson correlation of the degrees at the
@@ -677,6 +641,18 @@ object Graph {
       .orderBy(col("k"))
   }
 
+  /** Generic k-core peeling over a symmetric (src, dst) edge list:
+    * `rounds` synchronous rounds of "keep nodes with ≥ k surviving
+    * neighbors". The k-core is the unique maximal subgraph where every
+    * node has degree ≥ k, and synchronous peeling converges to it
+    * monotonically — so a FIXED round count is oracle-gateable exactly
+    * like communities_lpa, with the fixpoint (round R == round R−1)
+    * asserted by spec on the fixtures instead of run-till-converged
+    * nondeterminism. Each round is one node-table probe + one count
+    * aggregate, shuffle-bounded, run by [[Iterate]]: the per-round eager
+    * checkpoint truncates lineage and each round's blocks are released
+    * as the next materializes.
+    */
   private[graft] def kcoreOf(edges: DataFrame, k: Int, rounds: Int,
       broadcastNodes: Boolean = false,
       nodes0: Option[DataFrame] = None,
@@ -697,32 +673,20 @@ object Graph {
     // buys no job-floor back and the dual-reference form re-evaluates
     // 2^rounds times, 13 s vs 3.2 s; the per-round eager checkpoint
     // with the convergence early-exit remains the cheapest schedule).
-    // The fixpoint count rides each round's checkpoint job as an
-    // observed metric; an unchanged COUNT is an unchanged SET (peeling
-    // only removes), so converged rounds never launch.
-    var nodes = nodes0.getOrElse(edges.select(col("src").as("node")).distinct())
-    // -1 = unknown: the first round never reads it (counts are >= 0)
-    var prevCount = nNodes0.getOrElse(-1L)
-    var prevCkpt: Option[DataFrame] = None
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      val obs = org.apache.spark.sql.Observation()
-      val next = edges
-        .join(bc(nodes.select(col("node").as("dst"))), "dst")
-        .groupBy(col("src")).agg(count(lit(1)).as("dcount"))
-        .filter(col("dcount") >= k)
-        .select(col("src").as("node"))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      val nextCount = obs.get.apply("n").asInstanceOf[Long]
-      converged = nextCount == prevCount
-      prevCount = nextCount
-      prevCkpt.foreach(org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint)
-      prevCkpt = Some(next)
-      nodes = next
-      r += 1
-    }
+    // The fixpoint count is each round's observed metric; an unchanged
+    // COUNT is an unchanged SET (peeling only removes), so converged
+    // rounds never launch. -1 = unknown init count: the first round
+    // never matches it (counts are >= 0).
+    val init = nodes0.getOrElse(edges.select(col("src").as("node")).distinct())
+    val nodes = Iterate(Iterate.Round(init, Row(nNodes0.getOrElse(-1L))), rounds,
+        metrics = Seq(count(lit(1))), stop = (prev, cur) => cur.long == prev.long) {
+      (prev, _) =>
+        edges
+          .join(bc(prev.frame.select(col("node").as("dst"))), "dst")
+          .groupBy(col("src")).agg(count(lit(1)).as("dcount"))
+          .filter(col("dcount") >= k)
+          .select(col("src").as("node"))
+    }.frame
     edges
       .join(bc(nodes.withColumnRenamed("node", "src")), "src")
       .join(bc(nodes.select(col("node").as("dst"))), "dst")

@@ -81,28 +81,37 @@ object Bridge {
     * for. This helper re-wraps the checkpointed RDD with the
     * partitioning the caller established.
     *
-    * CONTRACT: the input MUST have just been laid out by
-    * `repartition(numPartitions, cols…)` on exactly `colNames` (a
-    * `REPARTITION_BY_NUM` shuffle, which AQE may not coalesce) — the
-    * declaration is trusted, and declaring a layout the blocks do not
-    * actually have silently mis-groups downstream aggregates.
-    * BridgePartitioningSpec pins result-equality and the no-exchange
-    * plan shape.
+    * CONTRACT: the input's top node MUST be `repartition(numPartitions,
+    * cols…)` on exactly `colNames` (a `REPARTITION_BY_NUM` shuffle,
+    * which AQE may not coalesce). Declaring a layout the blocks do not
+    * have would silently mis-group downstream aggregates, so any other
+    * input is rejected before a job runs. BridgePartitioningSpec pins
+    * result-equality, the no-exchange plan shape and the rejections.
     */
   def localCheckpointHashPartitioned(df: org.apache.spark.sql.DataFrame,
       numPartitions: Int, colNames: String*): org.apache.spark.sql.DataFrame = {
-    val ck = df.localCheckpoint()
-    ck.queryExecution.analyzed match {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    df.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+          if r.optNumPartitions.contains(numPartitions) &&
+            r.partitionExpressions.map {
+              case a: Attribute => a.name
+              case e => e.sql
+            } == colNames =>
+      case other => throw new IllegalArgumentException(
+        s"expected repartition($numPartitions, ${colNames.mkString(", ")}) on top, got:\n$other")
+    }
+    df.localCheckpoint().queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
-        val attrs = colNames.map(n => l.output.find(_.name == n).getOrElse(
-          throw new IllegalArgumentException(s"no column '$n' in ${l.output}")))
+        val attrs = colNames.map(n => l.output.find(_.name == n).get)
         val part = org.apache.spark.sql.catalyst.plans.physical
           .HashPartitioning(attrs, numPartitions)
         ofRows(df.sparkSession, new org.apache.spark.sql.execution.LogicalRDD(
           l.output, l.rdd, part, l.outputOrdering, l.isStreaming, l.stream)(
           df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
           None, None))
-      case _ => ck // unexpected plan shape: fall back to the plain checkpoint
+      case other =>
+        throw new IllegalStateException(s"localCheckpoint gave $other, not a LogicalRDD")
     }
   }
 

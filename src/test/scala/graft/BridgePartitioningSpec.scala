@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graft.JobCounter
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
@@ -7,7 +9,9 @@ import org.apache.spark.sql.graft.Bridge
   * layout must (1) change nothing about the data, (2) actually remove
   * the downstream exchange a keyed aggregate would otherwise insert,
   * and (3) group correctly — a wrong declaration would silently
-  * mis-aggregate, which is the failure mode the contract warns about.
+  * mis-aggregate, which is the failure mode the contract guards: an
+  * input not laid out by exactly the declared repartition is rejected
+  * before any job runs.
   */
 class BridgePartitioningSpec extends SparkSuite {
 
@@ -59,5 +63,25 @@ class BridgePartitioningSpec extends SparkSuite {
       .map { case (k, vs) => k -> vs.size.toLong }
     assert(got == want)
     Bridge.unpersistLocalCheckpoint(ck)
+  }
+
+  private def rejectedWithoutJobs(input: DataFrame, n: Int, cols: String*): Unit = {
+    val (ex, jobs) = JobCounter(spark) {
+      intercept[IllegalArgumentException](Bridge.localCheckpointHashPartitioned(input, n, cols: _*))
+    }
+    assert(ex.getMessage.contains("expected repartition"))
+    assert(jobs == 0, s"the contract check ran $jobs job(s) before rejecting")
+  }
+
+  test("a layout on a different column is rejected before any job runs") {
+    rejectedWithoutJobs(df.repartition(4, col("v")), 4, "k")
+  }
+
+  test("a layout with a different partition count is rejected before any job runs") {
+    rejectedWithoutJobs(df.repartition(8, col("k")), 4, "k")
+  }
+
+  test("an input with no repartition on top is rejected before any job runs") {
+    rejectedWithoutJobs(df.repartition(4, col("k")).filter(col("v") > 0), 4, "k")
   }
 }

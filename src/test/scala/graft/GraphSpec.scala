@@ -151,6 +151,26 @@ class GraphSpec extends SparkSuite {
     assert(got.filter(_._1 == "authority").map(_._3).max == 1000000L)
   }
 
+  test("hits_scores keeps only the edge layouts and the final a/h checkpoints") {
+    // warm the shared artifacts so only the query's own blocks are new
+    Graph.edgeTable(spark, sf0001).count()
+    Graph.degreeTable(spark, sf0001).count()
+    Graph.hubSeedAndNodes(spark, sf0001)
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val hits = Graph.hitsScores(spark, sf0001)
+    val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    val resultBlocks = hits.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    // the result reads the last a- and h-half checkpoints; beside them
+    // only the two edge layouts (spPk, spSk) may stay — the four earlier
+    // half-round checkpoints are released as they are superseded (at
+    // most, not exactly, 4: the context cleaner may already have dropped
+    // the layouts, which nothing references once the query is built)
+    assert(resultBlocks.size == 2 && resultBlocks.subsetOf(added), s"$resultBlocks vs $added")
+    assert(added.size <= 4, s"${added.size} new persistent RDDs: $added")
+  }
+
   test("adamic_adar: top-20 predicted links match a brute-force recompute") {
     val sp = spark.read.parquet(s"$sf0001/lineitem.parquet")
       .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk")).distinct()

@@ -4,8 +4,9 @@ import java.nio.file.Files
 
 import graft.operators.{GroupedKeyIterator, MRJob, TextSink}
 
-/** The MR capability surface (SURVEY.md §2 tier A) against the reference's
-  * own corpus and semantics — intended (race-free) results per SURVEY §3.4.
+/** The MR capability surface (SURVEY.md §2 tier A) against the reference
+  * corpus's invariants ([[ReferenceCorpus]]) and the reference's
+  * semantics — intended (race-free) results per SURVEY §3.4.
   */
 object MRJobSpec {
   /** The reference mapper (`distwc.c:8-22`): strsep on " \t\n\r", emitting
@@ -22,7 +23,7 @@ class MRJobSpec extends SparkSuite {
   test("wordcount over the reference corpus: every word exactly 5000") {
     import spark.implicits._
     val out = MRJob.run[String, String, (String, Long)](
-      MRJob.lines(spark, Seq("/root/reference/sample_inputs")),
+      MRJob.lines(spark, Seq(ReferenceCorpus.dir)),
       wcMapper,
       (k, vs) => (k, vs.size.toLong))
       .collect().toMap
@@ -46,7 +47,7 @@ class MRJobSpec extends SparkSuite {
     import spark.implicits._
     val out = MRJob.runPartitioned[(Int, String, Long)](
       spark,
-      MRJob.lines(spark, Seq("/root/reference/sample_inputs")),
+      MRJob.lines(spark, Seq(ReferenceCorpus.dir)),
       wcMapper,
       (pid, k, vs) => (pid, k, vs.size.toLong),
       numPartitions = 10)
@@ -96,7 +97,7 @@ class MRJobSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft-sink").toString
     val wc = MRJob.run[String, String, (String, Long)](
-      MRJob.lines(spark, Seq("/root/reference/sample_inputs")),
+      MRJob.lines(spark, Seq(ReferenceCorpus.dir)),
       wcMapper, (k, vs) => (k, vs.size.toLong))
       .toDF("key", "value")
     val files = TextSink.write(spark, wc, dir, 10)
@@ -127,7 +128,7 @@ class MRJobSpec extends SparkSuite {
     assert(byName("c.txt") == "z" && byName("a.txt") == "x " * 50)
     // and the reference corpus reads identically through SJF and the
     // native whole-file scan (multiset of contents, order aside)
-    val ref = "/root/reference/sample_inputs"
+    val ref = ReferenceCorpus.dir
     val sjf = graft.operators.MRJob.sjfFiles(spark, ref).collect().map(_._2).sorted
     val native = graft.operators.MRJob.wholeFiles(spark, ref).collect().sorted
     assert(sjf.toSeq == native.toSeq)

@@ -197,7 +197,7 @@ class SqlSurfaceSpec extends SparkSuite {
 
   test("runAgg (typed Aggregator reducer) matches run (mapGroups reducer)") {
     import spark.implicits._
-    val input = MRJob.lines(spark, Seq("/root/reference/sample_inputs"))
+    val input = MRJob.lines(spark, Seq(ReferenceCorpus.dir))
     def mapper(line: String): IterableOnce[(String, String)] =
       line.split("[ \t\n\r]", -1).iterator.map(t => (t, "1"))
     val viaAgg = MRJob.runAgg[String, String, Long, Long](
@@ -211,7 +211,7 @@ class SqlSurfaceSpec extends SparkSuite {
   test("streaming MR wordcount over the reference corpus (complete mode)") {
     import spark.implicits._
     val counts = MRJob.runStreaming[String, String, Long, Long](
-      spark, "/root/reference/sample_inputs",
+      spark, ReferenceCorpus.dir,
       line => line.split("[ \t\n\r]", -1).iterator.map(t => (t, "1")),
       new MRAggregators.CountValues[String])
     val q = counts.toDF("key", "cnt").writeStream
