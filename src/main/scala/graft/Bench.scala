@@ -108,8 +108,9 @@ object Bench {
     // base, ...), but across ~180 queries x 2 passes those temporaries
     // accumulate in the 8g bench JVM until late queries pay their GC
     // bill. After each query, unpersist every RDD that is NOT the
-    // backing storage of a DfCache-managed materialized artifact (the
-    // warm shared inputs must stay hot — that is their point).
+    // backing storage of a DataFrame held in the SessionCache registry
+    // (MaterializedCaches.allDfs: the warm shared inputs must stay hot —
+    // that is their point).
     def sweepTemporaries(): Unit = {
       val protectedIds = MaterializedCaches.allDfs
         .flatMap(df => try org.apache.spark.sql.graft.Bridge.cachedRddIds(df)

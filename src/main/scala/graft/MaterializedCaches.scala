@@ -3,52 +3,73 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.concurrent.TrieMap
 
-/** A (session, sfDir)-keyed cache of a materialized shared input (a
-  * persisted DataFrame computed once and consumed by several queries).
+/** A (session, sfDir)-keyed cache of a shared artifact computed once and
+  * consumed by several queries: a persisted DataFrame ([[DfCache]]), a
+  * driver-side scalar or model, or the path of an on-disk artifact.
+  * Every instance registers itself, so [[MaterializedCaches.invalidateAll]]
+  * releases all of them.
   *
-  * Staleness caveat: entries are keyed by path, not by file content — if
-  * the parquet files under an sfDir are rewritten while a JVM holds a
-  * cached entry, consumers keep reading the persisted stale blocks until
-  * [[MaterializedCaches.invalidateAll]] (or [[clear]]) is called. Tools
-  * and tests that rewrite inputs must invalidate first; long-lived
-  * multi-session apps should invalidate when retiring a session so the
-  * strong session references and their storage blocks are released.
+  * Staleness caveat (all three kinds): entries are keyed by path, not by
+  * file content — if the parquet files under an sfDir are rewritten while
+  * a JVM holds an entry, consumers keep reading the stale DataFrame
+  * blocks, scalar or artifact until [[MaterializedCaches.invalidateAll]]
+  * (or [[clear]]) is called. Tools and tests that rewrite inputs must
+  * invalidate first; long-lived multi-session apps should invalidate when
+  * retiring a session so the strong session references and their storage
+  * blocks are released. A path entry is only forgotten: its files stay on
+  * disk, a temp directory until [[TempArtifacts]] deletes it at JVM exit.
+  *
+  * @param release frees an entry's resources when it is dropped
   */
-final class DfCache(val name: String) {
-  private val m = TrieMap.empty[(SparkSession, String), DataFrame]
+class SessionCache[V](val name: String, release: V => Unit = (_: V) => ()) {
+  private val m = TrieMap.empty[(SparkSession, String), V]
   MaterializedCaches.register(this)
 
-  def getOrElseUpdate(key: (SparkSession, String), compute: => DataFrame): DataFrame =
+  def getOrElseUpdate(key: (SparkSession, String), compute: => V): V =
     m.getOrElseUpdate(key, compute)
 
-  private[graft] def dfs: Seq[DataFrame] = m.values.toSeq
+  /** Replace the entry, releasing the one it replaces (a producer query
+    * refreshing its model).
+    */
+  def put(key: (SparkSession, String), v: V): Unit = m.put(key, v).foreach(release)
 
-  /** Unpersist every cached block and drop all entries (incl. the strong
-    * SparkSession references).
+  private[graft] def values: Seq[V] = m.values.toSeq
+
+  /** Release every entry and drop it (incl. the strong SparkSession
+    * references).
     */
   def clear(): Unit = {
-    m.values.foreach(df => try df.unpersist(blocking = false) catch { case _: Exception => () })
+    m.values.foreach(v => try release(v) catch { case _: Exception => () })
     m.clear()
   }
 }
 
-/** Registry of every [[DfCache]] in the engine, so one call releases all
-  * materialized shared inputs (see the staleness caveat on [[DfCache]]).
+/** A [[SessionCache]] of persisted DataFrames, unpersisted on release. */
+final class DfCache(name: String)
+    extends SessionCache[DataFrame](name, _.unpersist(blocking = false))
+
+/** Registry of every [[SessionCache]] in the engine, so one call releases
+  * all shared artifacts (see the staleness caveat on [[SessionCache]]).
   */
 object MaterializedCaches {
-  private val all = TrieMap.empty[String, DfCache]
+  private val all = TrieMap.empty[String, SessionCache[_]]
 
-  private[graft] def register(c: DfCache): Unit = all.put(c.name, c)
+  // a second cache under one name would hide the first from invalidateAll
+  private[graft] def register(c: SessionCache[_]): Unit =
+    require(all.putIfAbsent(c.name, c).isEmpty, s"cache name ${c.name} registered twice")
 
-  /** Unpersist and forget every cached shared input across all modules. */
+  /** Release and forget every cached shared artifact across all modules. */
   def invalidateAll(): Unit = all.values.foreach(_.clear())
 
-  private[graft] def registered: Seq[String] = all.keys.toSeq.sorted
+  /** Each registered cache's name with its entry count, by name. */
+  private[graft] def registered: Seq[(String, Int)] =
+    all.toSeq.map { case (n, c) => n -> c.values.size }.sortBy(_._1)
 
   /** Every DataFrame currently held by any [[DfCache]] — the protected
     * set for the bench's between-queries storage janitor.
     */
-  private[graft] def allDfs: Seq[DataFrame] = all.values.flatMap(_.dfs).toSeq
+  private[graft] def allDfs: Seq[DataFrame] =
+    all.values.toSeq.collect { case c: DfCache => c.values }.flatten
 }
 
 /** JVM-lifetime registry of temporary on-disk artifacts (the materialized

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Distributed Lloyd's k-means in EXACT integer arithmetic — the coarse
   * quantizer TRAINER behind an IVF index (the embedding analog of the
@@ -80,8 +81,12 @@ object Kmeans {
   def trainQ(q0: DataFrame, k: Int = 8, iters: Int = 2): Array[Array[Long]] = {
     require(k >= 1 && iters >= 0)
     // persist: each iteration re-reads the quantized table (assignment +
-    // update); also guarantees init and iterations see ONE evaluation
-    val q = q0.persist()
+    // update); also guarantees init and iterations see ONE evaluation.
+    // A frame the caller cached stays the caller's to release: Spark keeps
+    // one cache entry per plan, so unpersisting it here would drop it
+    // under a concurrent trainer on the same plan
+    val owned = q0.storageLevel == StorageLevel.NONE
+    val q = if (owned) q0.persist() else q0
     try {
       var cents = q.orderBy(col("vec_id")).limit(k).collect()
         .map(_.getSeq[Long](1).toArray)
@@ -103,6 +108,6 @@ object Kmeans {
         cents = next
       }
       cents
-    } finally q.unpersist()
+    } finally if (owned) q.unpersist()
   }
 }

@@ -70,8 +70,7 @@ object Graph {
         .repartition(col("dst")).persist()))
   }
 
-  private val hubSeeds =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Long, Long)]
+  private val hubSeeds = new graft.SessionCache[(Long, Long)]("graph.hubSeeds")
 
   /** (hub seed, node count) — the two driver-side scalars every seeded
     * graph query needs: the deterministic max-degree/min-id seed and the

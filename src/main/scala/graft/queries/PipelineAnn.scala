@@ -339,8 +339,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     * layer parses the query vector once per request; here the fixture's
     * one query IS session state, like the hub seed.
     */
-  private[queries] val qvCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Array[Long]]()
+  private val qvCache = new graft.SessionCache[Array[Long]]("pipeline.queryVec")
 
   private[queries] def queryVec(s: SparkSession, d: String): Array[Long] =
     qvCache.getOrElseUpdate((s, d),
@@ -367,14 +366,12 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     * scalar posture: the index-sizing queries and the semantic-dedup
     * quantizer all size k from the identical count job.
     */
-  private val embCountCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]()
+  private val embCountCache = new graft.SessionCache[Long]("pipeline.embCount")
 
   private[queries] def embCount(s: SparkSession, d: String): Long =
     embCountCache.getOrElseUpdate((s, d), Tables.embeddings(s, d).count())
 
-  private[queries] val kmeansCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Array[Array[Long]]]()
+  private val kmeansCache = new graft.SessionCache[Array[Array[Long]]]("pipeline.kmeansModel")
 
   def kmeansModel(s: SparkSession, d: String): Array[Array[Long]] =
     kmeansCache.getOrElseUpdate((s, d),
@@ -391,8 +388,8 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     * the dedup family's cell budget must scale with the corpus or the
     * verify stage becomes the corpus's one quadratic pass.
     */
-  private[queries] val semanticCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Array[Array[Long]]]()
+  private val semanticCache =
+    new graft.SessionCache[Array[Array[Long]]]("pipeline.semanticModel")
 
   def semanticModel(s: SparkSession, d: String): Array[Array[Long]] =
     semanticCache.getOrElseUpdate((s, d), {
@@ -470,8 +467,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     * consumer). Depends on the coarse model: training consumes
     * [[kmeansModel]]'s cells.
     */
-  private[queries] val pqCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Array[Array[Array[Long]]]]()
+  private val pqCache = new graft.SessionCache[Array[Array[Array[Long]]]]("pipeline.pqModel")
 
   def pqModel(s: SparkSession, d: String): Array[Array[Array[Long]]] =
     pqCache.getOrElseUpdate((s, d),
@@ -660,19 +656,17 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     * one `cell=<cid>` directory per trained coarse cell holding only
     * (vec_id, code32) — the M byte codes bit-packed into one int, so a
     * vector's index entry is literally 4 bytes + id. Written once per
-    * JVM through
-    * [[graft.sources.Layout.writePartitioned]] (the partitionedOrders
-    * convention: the ingest job writes, every consumer reads back).
+    * session through [[graft.sources.Layout.writePartitioned]] (the
+    * partitionedOrders convention: the ingest job writes, every consumer
+    * reads back).
     * At 100 TB this layout is why IVF probes are cheap: an unprobed
     * cell's directory is never even LISTED into the scan.
     */
-  private[queries] val pqIndexCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
+  private val pqIndexCache = new graft.SessionCache[String]("pipeline.pqIndexPath")
 
   def pqIndexPath(s: SparkSession, d: String): String =
-    // keyed (session, dir) like pqCache/kmeansCache: a later SparkSession
-    // in the same JVM must not silently reuse an index written under a
-    // retired session; the dir itself is registered for exit cleanup
+    // a later SparkSession in the same JVM must not silently reuse an
+    // index written under a retired session
     pqIndexCache.getOrElseUpdate((s, d), {
       val dir = graft.TempArtifacts.create("graft-pq-index")
       val coarse = kmeansModel(s, d)
@@ -959,8 +953,8 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     * aggregate"), and sq8_topk, sq8_recall and quantization_error each
     * re-ran the full corpus posexplode aggregate to re-derive it.
     */
-  private[queries] val sq8BoundsCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Array[(Int, Long, Long)]]()
+  private val sq8BoundsCache =
+    new graft.SessionCache[Array[(Int, Long, Long)]]("pipeline.sq8Bounds")
 
   private[queries] def sq8Bounds(s: SparkSession, d: String): Array[(Int, Long, Long)] =
     sq8BoundsCache.getOrElseUpdate((s, d),
@@ -1196,16 +1190,19 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     // sequential driver jobs — submitted from two driver threads they
     // back-fill each other's scheduling gaps (guide §2.6 overlap
     // independent jobs), so the query pays max(train) wall instead of
-    // the sum. Results are order-pinned by the ladder Seq.
-    val rows = parTrains(Seq(8, Kmeans.ncellsFor(n))) { k =>
-      val model = Kmeans.train(emb, k = k, iters = 2)
+    // the sum. Results are order-pinned by the ladder Seq. Both chains
+    // train on one frame persisted here, so neither releases it under
+    // the other.
+    val q = Kmeans.quantized(emb).persist()
+    val rows = try parTrains(Seq(8, Kmeans.ncellsFor(n))) { k =>
+      val model = Kmeans.trainQ(q, k = k, iters = 2)
       val nprobe = math.max(1, 3 * k / 8)
       val probed = model.zipWithIndex.map { case (c, cid) =>
         var dsum = 0L; var i = 0
         while (i < c.length) { val dd = qv(i) - c(i); dsum += dd * dd; i += 1 }
         (dsum, cid)
       }.sorted.take(nprobe).map(_._2)
-      val ivf = Kmeans.quantized(emb).filter(col("vec_id") =!= 0)
+      val ivf = q.filter(col("vec_id") =!= 0)
         .select(col("vec_id"),
           Kmeans.nearest(model).getField("cid").as("cid"),
           graft.functions.SketchExprs.nearestCentroid(col("v"), Array(qv))
@@ -1219,7 +1216,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
         .select(lit(k).cast("int").as("ncells"),
           lit(nprobe).cast("int").as("nprobe"), col("n_hit"),
           expr("10000 * n_hit div 20").as("recall_bp"))
-    }
+    } finally q.unpersist()
     rows.reduce(_ union _).orderBy(col("ncells"))
   }
 

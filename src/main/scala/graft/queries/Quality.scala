@@ -212,8 +212,7 @@ object Quality {
       .select(col("doc_id"), col("y"), coalesce(col("dot"), lit(0L)).as("s"))
   }
 
-  private[queries] val qmCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), (Array[Long], Long)]()
+  private val qmCache = new graft.SessionCache[(Array[Long], Long)]("quality.qmModel")
 
   private[graft] def qmModel(s: SparkSession, d: String): (Array[Long], Long) =
     qmCache.getOrElseUpdate((s, d), qmTrainModel(s, d))
@@ -1028,11 +1027,10 @@ object Quality {
 
   // --- learned-BPE token counting ---------------------------------------
 
-  private val bpeMergeCache =
-    new scala.collection.concurrent.TrieMap[String, Array[String]]()
+  private val bpeMergeCache = new graft.SessionCache[Array[String]]("quality.bpeMerges")
 
   /** The learned BPE merge table for testdata dir `d` — trained once per
-    * JVM and reused by every consumer (the trained-artifact posture of
+    * session and reused by every consumer (the trained-artifact posture of
     * the IVF centroids: in production the tokenizer is trained once and
     * shipped to every job). The distributed part is the word-frequency
     * aggregation (a groupBy/count over all alpha runs); the merge loop
@@ -1041,7 +1039,7 @@ object Quality {
     * Vocabulary ties break on (count desc, word asc): deterministic.
     */
   def bpeMerges(s: SparkSession, d: String): Array[String] =
-    bpeMergeCache.getOrElseUpdate(d, {
+    bpeMergeCache.getOrElseUpdate((s, d), {
       val words = docs(s, d).select(
           explode(regexp_extract_all(col("text"), lit("[A-Za-z]+"), lit(0))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))

@@ -188,11 +188,10 @@ object Layout {
     df.repartition(col(partCol))
       .write.mode("overwrite").partitionBy(partCol).parquet(path)
 
-  private val partitionedOrdersCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
+  private val partitionedOrdersCache = new graft.SessionCache[String]("layout.partitionedOrders")
 
   /** Path of the month-partitioned orders artifact for testdata dir `d`
-    * — written once per JVM via [[writePartitioned]] (12 `omonth=<m>`
+    * — written once per session via [[writePartitioned]] (12 `omonth=<m>`
     * directories, one file each). The production posture: the
     * partitioned fact table is written ONCE by the ingest job and every
     * consumer reads it back; [[graft.queries.Analytics.dppJoin]] is the

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import scala.collection.concurrent.TrieMap
 
 /** Raw-ingest first mile: schema-contracted JSONL and CSV document
   * readers — the crawl-dump shape every real LLM pipeline starts from
@@ -66,18 +65,24 @@ object RawIngest {
       s"$tempRoot/$fmt-$key"
   }
 
-  private val staged = TrieMap.empty[(SparkSession, String, String), String]
+  private val staged = new graft.SessionCache[String]("rawIngest.staged")
+
+  /** Write format `fmt`'s staging once per (session, sfDir) via `write`
+    * and return its dir.
+    */
+  private def stage(s: SparkSession, sfDir: String, fmt: String)(write: String => Unit): String =
+    staged.getOrElseUpdate((s, s"$fmt:$sfDir"), {
+      val dir = stageDir(fmt, sfDir)
+      write(dir)
+      dir
+    })
 
   /** Stage the documents table as raw JSONL shards (idempotent per
     * session+sfDir). The write cost belongs to the producing dump job
     * — the ingest queries measure the READ path after the first pass.
     */
   def stageJsonl(s: SparkSession, sfDir: String): String =
-    staged.getOrElseUpdate((s, sfDir, "jsonl"), {
-      val dir = stageDir("jsonl", sfDir)
-      Tables.documents(s, sfDir).write.mode("overwrite").json(dir)
-      dir
-    })
+    stage(s, sfDir, "jsonl")(Tables.documents(s, sfDir).write.mode("overwrite").json(_))
 
   /** Stage the documents table as GZIP-compressed JSONL shards
     * (`part-*.json.gz`) — the shape crawl dumps actually arrive in.
@@ -94,12 +99,8 @@ object RawIngest {
     * `java.util.zip` and always available.
     */
   def stageJsonlGz(s: SparkSession, sfDir: String): String =
-    staged.getOrElseUpdate((s, sfDir, "jsonl_gz"), {
-      val dir = stageDir("jsonl_gz", sfDir)
-      Tables.documents(s, sfDir).write.mode("overwrite")
-        .option("compression", "gzip").json(dir)
-      dir
-    })
+    stage(s, sfDir, "jsonl_gz")(Tables.documents(s, sfDir).write.mode("overwrite")
+      .option("compression", "gzip").json(_))
 
   /** Recompress the gzip JSONL staging into zstd PARQUET — the
     * documented scale recommendation made runnable: one pass through
@@ -110,22 +111,13 @@ object RawIngest {
     * is paid exactly once.
     */
   def stageRecompressed(s: SparkSession, sfDir: String): String =
-    staged.getOrElseUpdate((s, sfDir, "recompressed"), {
-      val dir = stageDir("recompressed", sfDir)
-      jsonl(s, stageJsonlGz(s, sfDir)).write.mode("overwrite")
-        .option("compression", "zstd").parquet(dir)
-      dir
-    })
+    stage(s, sfDir, "recompressed")(jsonl(s, stageJsonlGz(s, sfDir)).write.mode("overwrite")
+      .option("compression", "zstd").parquet(_))
 
   /** Stage the documents table as raw headerless CSV shards. */
   def stageCsv(s: SparkSession, sfDir: String): String =
-    staged.getOrElseUpdate((s, sfDir, "csv"), {
-      val dir = stageDir("csv", sfDir)
-      Tables.documents(s, sfDir).write.mode("overwrite")
-        .option("header", "false").option("quote", "\"").option("escape", "\"")
-        .csv(dir)
-      dir
-    })
+    stage(s, sfDir, "csv")(Tables.documents(s, sfDir).write.mode("overwrite")
+      .option("header", "false").option("quote", "\"").option("escape", "\"").csv(_))
 
   /** FAILFAST JSONL read under a declared schema — a corrupt line or a
     * type-incompatible field kills the job loudly (the AvroSource

@@ -154,7 +154,6 @@ class GraphSpec extends SparkSuite {
   test("hits_scores keeps only the edge layouts and the final a/h checkpoints") {
     // warm the shared artifacts so only the query's own blocks are new
     Graph.edgeTable(spark, sf0001).count()
-    Graph.degreeTable(spark, sf0001).count()
     Graph.hubSeedAndNodes(spark, sf0001)
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val hits = Graph.hitsScores(spark, sf0001)

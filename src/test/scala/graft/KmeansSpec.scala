@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Kmeans
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The integer-lattice k-means trainer: assignments are the true argmin
   * (independent Scala recompute), training is bit-reproducible, and the
@@ -58,6 +59,20 @@ class KmeansSpec extends SparkSuite {
       assert(k == rk && np == rnp && hit == rhit && bp == 10000L * rhit / 20L,
         s"ncells $k: got ($np, $hit, $bp) want ($rnp, $rhit)")
     }
+  }
+
+  test("trainQ releases only a frame it persisted itself") {
+    // Spark keeps one cache entry per plan: a trainer that unpersisted a
+    // caller's frame would drop it under a concurrent trainer on it too
+    val emb = graft.sources.Tables.embeddings(spark, sf0001)
+    val q = Kmeans.quantized(emb).persist()
+    try {
+      Kmeans.trainQ(q, k = 4, iters = 1)
+      assert(q.storageLevel != StorageLevel.NONE)
+    } finally q.unpersist()
+    val fresh = Kmeans.quantized(emb.filter(col("vec_id") % 2 === 0))
+    Kmeans.trainQ(fresh, k = 4, iters = 1)
+    assert(fresh.storageLevel == StorageLevel.NONE)
   }
 
   test("training is bit-reproducible across runs") {

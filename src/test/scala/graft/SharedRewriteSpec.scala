@@ -85,13 +85,43 @@ class SharedRewriteSpec extends SparkSuite {
   }
 
   test("MaterializedCaches.invalidateAll clears every registered cache") {
-    // populate at least one cache, then invalidate: a second call must be
-    // safe and the registry must know all module caches
+    // one entry of each kind: a DataFrame, a scalar (over the cached
+    // degree table), a path and the BPE merges
     graft.streaming.Sessions.sessionTable(spark, sf0001).count()
-    assert(MaterializedCaches.registered.contains("sessions.sessionTable"))
+    Graph.hubSeedAndNodes(spark, sf0001)
+    graft.sources.Layout.partitionedOrders(spark, sf0001)
+    Quality.bpeMerges(spark, sf0001)
+    def held = MaterializedCaches.registered.toMap
+    Seq("sessions.sessionTable", "graph.degrees", "graph.hubSeeds",
+        "layout.partitionedOrders", "quality.bpeMerges")
+      .foreach(n => assert(held.getOrElse(n, 0) >= 1, s"$n not held: $held"))
+    val dfRdds = MaterializedCaches.allDfs.flatMap(Bridge.cachedRddIds).toSet
+    assert(dfRdds.nonEmpty)
     MaterializedCaches.invalidateAll()
     MaterializedCaches.invalidateAll() // idempotent
+    assert(held.values.forall(_ == 0), s"entries left: $held")
+    assert(MaterializedCaches.allDfs.isEmpty)
+    val left = dfRdds & spark.sparkContext.getPersistentRDDs.keySet
+    assert(left.isEmpty, s"still persisted: $left")
+    // the scalar is recomputed, so the degree table under it is rebuilt
+    Graph.hubSeedAndNodes(spark, sf0001)
+    assert(held("graph.degrees") == 1)
     // caches repopulate on demand after invalidation
     assert(graft.streaming.Sessions.sessionTable(spark, sf0001).count() > 0)
+  }
+
+  test("no cache is hand-rolled outside MaterializedCaches") {
+    // a per-(session, dir) memo that bypasses SessionCache escapes
+    // invalidateAll; every such memo so far was a TrieMap field
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val root = Path.of("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root, not ${Path.of("").toAbsolutePath}")
+    val offenders = scala.util.Using.resource(Files.walk(root))(_.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "MaterializedCaches.scala" &&
+        Files.readString(p).contains("TrieMap"))
+      .toList)
+    assert(offenders.isEmpty, s"TrieMap outside MaterializedCaches.scala: $offenders")
   }
 }
