@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-artifact warmup isolation (BenchWarmSpec): round 8's single
   * shared try aborted at the first failure and silently un-warmed every
@@ -19,15 +19,45 @@ object BenchWarm {
 }
 
 object Bench {
+  /** The session every command-line entry point (Bench, Verify,
+    * tools.Probe) runs on: the [[GraftSession]] recipe at
+    * `local[SPARK_GRAFT_CPUS]` (default 4), so a query plans the same way
+    * whichever harness runs it and whichever queries ran before it.
+    */
+  private[graft] def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  // Queries whose optimized plan LOSES joins under a bare count()
+  // (Catalyst join elimination: outer join on a unique key with no
+  // right-side column referenced preserves row count) — timing those
+  // via count() measures less than any real consumer pays (the
+  // quality_model_score lesson, r15 commit 8f6eb92). These consume
+  // via toRdd.count(), which executes the query's OWN physical plan
+  // (every output column materialized into the UnsafeRow) without a
+  // driver collect. PlanInvariantsSpec's every-query loop flags any
+  // query missing from this list.
+  private[graft] val materializeFully: Set[String] = Set(
+    "boilerplate_ngrams", "boilerplate_scrub", "column_profile",
+    "contamination_check", "decontaminate_train", "dedup_semantic",
+    "distinct_ngrams", "dsir_weights", "dup_rate_by_source", "gap_fill",
+    "ivf_ingest", "outer_join", "quality_model_agreement", "rich_club",
+    "right_outer_join", "semdedup_threshold_curve", "snm_recall",
+    "source_mix_report", "triangle_count", "vocab_coverage")
+
+  /** Run a declared query's result to completion the way the bench times
+    * it; returns its row count.
+    */
+  private[graft] def consume(name: String, df: DataFrame): Long =
+    if (materializeFully(name)) df.queryExecution.toRdd.count()
+    else df.count()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     // untimed warmup: JVM/codegen/parquet-footer startup costs (~4 s)
     // otherwise land entirely on whichever query happens to run first.
     // The tiny dedup slice compiles the heavy generated-code families
@@ -119,32 +149,14 @@ object Bench {
         if (!protectedIds.contains(id)) rdd.unpersist(blocking = false)
       }
     }
-    // Queries whose optimized plan LOSES joins under a bare count()
-    // (Catalyst join elimination: outer join on a unique key with no
-    // right-side column referenced preserves row count) — timing those
-    // via count() measures less than any real consumer pays (the
-    // quality_model_score lesson, r15 commit 8f6eb92). These consume
-    // via toRdd.count(), which executes the query's OWN physical plan
-    // (every output column materialized into the UnsafeRow) without a
-    // driver collect. Audited list — regenerate with
-    // tools/CountPruneAudit after adding queries.
-    val materializeFully: Set[String] = Set(
-      "boilerplate_ngrams", "boilerplate_scrub", "column_profile",
-      "contamination_check", "decontaminate_train", "dedup_semantic",
-      "distinct_ngrams", "dsir_weights", "dup_rate_by_source", "gap_fill",
-      "ivf_ingest", "outer_join", "quality_model_agreement", "rich_club",
-      "right_outer_join", "semdedup_threshold_curve", "snm_recall",
-      "source_mix_report", "triangle_count", "vocab_coverage")
-    def pass(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def pass(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
       // sweep in finally: a FAILING query must also release its persisted
       // temporaries, or they tax every subsequent query's memory/GC —
       // exactly the cross-query contamination the janitor exists to stop.
       // The clock is read INSIDE the try so the sweep stays untimed.
       try {
-        val df = fn(spark, sfDir)
-        if (materializeFully(name)) df.queryExecution.toRdd.count()
-        else df.count()
+        consume(name, fn(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
       }
       catch {

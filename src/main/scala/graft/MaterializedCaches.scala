@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import scala.collection.concurrent.TrieMap
 
 /** A (session, sfDir)-keyed cache of a shared artifact computed once and
@@ -64,6 +65,15 @@ object MaterializedCaches {
   /** Each registered cache's name with its entry count, by name. */
   private[graft] def registered: Seq[(String, Int)] =
     all.toSeq.map { case (n, c) => n -> c.values.size }.sortBy(_._1)
+
+  /** Persist `df` unless its plan is already cached; true when this call
+    * cached it. Spark keeps one cache entry per plan: a second persist()
+    * only warns "Asked to cache already cached data" and reads the first
+    * entry, and only the caller that cached it may unpersist it — a lazy
+    * frame built earlier on the same plan still reads it.
+    */
+  def persistOnce(df: DataFrame): Boolean =
+    df.storageLevel == StorageLevel.NONE && { df.persist(); true }
 
   /** Every DataFrame currently held by any [[DfCache]] — the protected
     * set for the bench's between-queries storage janitor.

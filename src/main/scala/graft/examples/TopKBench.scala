@@ -13,6 +13,9 @@ import org.apache.spark.sql.functions._
 object TopKBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
+    // a plain session, not GraftSession: its RewriteWindowTopK rule would
+    // plan the "window" arm below as TopKPerGroup too, and the bench
+    // would compare the operator with itself
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false").getOrCreate()

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed Lloyd's k-means in EXACT integer arithmetic — the coarse
   * quantizer TRAINER behind an IVF index (the embedding analog of the
@@ -78,15 +77,13 @@ object Kmeans {
     * residual codebooks train on v − coarse_centroid slices, which are
     * integer vectors with no float source to quantize).
     */
-  def trainQ(q0: DataFrame, k: Int = 8, iters: Int = 2): Array[Array[Long]] = {
+  def trainQ(q: DataFrame, k: Int = 8, iters: Int = 2): Array[Array[Long]] = {
     require(k >= 1 && iters >= 0)
     // persist: each iteration re-reads the quantized table (assignment +
     // update); also guarantees init and iterations see ONE evaluation.
-    // A frame the caller cached stays the caller's to release: Spark keeps
-    // one cache entry per plan, so unpersisting it here would drop it
-    // under a concurrent trainer on the same plan
-    val owned = q0.storageLevel == StorageLevel.NONE
-    val q = if (owned) q0.persist() else q0
+    // A frame the caller cached stays the caller's to release: unpersisting
+    // it here would drop it under a concurrent trainer on the same plan
+    val owned = graft.MaterializedCaches.persistOnce(q)
     try {
       var cents = q.orderBy(col("vec_id")).limit(k).collect()
         .map(_.getSeq[Long](1).toArray)

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.MaterializedCaches
 import graft.operators.Dedup
 import graft.streaming.Sessions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -55,7 +56,7 @@ object Quality {
     * ran the corpus token explode + first shuffle twice, once per
     * consumer).
     */
-  private def tokenCounts(dd: DataFrame): DataFrame =
+  private[graft] def tokenCounts(dd: DataFrame): DataFrame =
     dd.select(col("doc_id"), explode(Dedup.tokensNE(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
 
@@ -151,7 +152,8 @@ object Quality {
     // (guide §2.3/§2.4). The label frame stays persisted too: it feeds
     // the feature join, the class counts AND the score pass. All
     // training temporaries are swept below / by the bench janitor.
-    val g = tokenCounts(docs(s, d)).persist()
+    val g = tokenCounts(docs(s, d))
+    val ownsG = MaterializedCaches.persistOnce(g)
     val labels = flagsOfCounts(g).select(col("doc_id"),
       when(col("kept"), 1L).otherwise(-1L).as("y")).persist()
     val fl = qmFeaturesOfCounts(g).join(labels, "doc_id").persist()
@@ -196,7 +198,7 @@ object Quality {
           .collect()(0) // one row: the trained threshold
         (w, best.getLong(0))
       } finally sc.unpersist()
-    } finally { fl.unpersist(); labels.unpersist(); g.unpersist() }
+    } finally { fl.unpersist(); labels.unpersist(); if (ownsG) g.unpersist() }
   }
 
   /** Score frame (doc_id, y, s) for a weight vector: one map pass —
@@ -267,7 +269,8 @@ object Quality {
     // oracle joins, so the domains agree by construction; labels and
     // scores fold ONE shared tokenCounts build (r18 — previously two
     // full token explodes)
-    val g = tokenCounts(docs(s, d)).persist()
+    val g = tokenCounts(docs(s, d))
+    MaterializedCaches.persistOnce(g)
     val sc = flagsOfCounts(g)
       .select(col("doc_id"), when(col("kept"), 1L).otherwise(-1L).as("y"))
       .join(qmScoreCounts(g, w, theta0)
@@ -354,7 +357,8 @@ object Quality {
     */
   private def qmScoredFrame(s: SparkSession, d: String,
       w: Array[Long]): DataFrame = {
-    val g = tokenCounts(docs(s, d)).persist()
+    val g = tokenCounts(docs(s, d))
+    MaterializedCaches.persistOnce(g)
     val labels = flagsOfCounts(g).select(col("doc_id"),
       when(col("kept"), 1L).otherwise(-1L).as("y"))
     qmScoresOf(labels, qmFeaturesOfCounts(g), w)

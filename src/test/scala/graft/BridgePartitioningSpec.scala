@@ -65,6 +65,25 @@ class BridgePartitioningSpec extends SparkSuite {
     Bridge.unpersistLocalCheckpoint(ck)
   }
 
+  test("every row of the declared layout sits in partition pmod(hash(cols), N)") {
+    // the declaration is only true if the checkpointed rows really are
+    // where HashPartitioning(cols, N) puts them: Murmur3 hash (seed 42,
+    // SQL hash()) modulo N, for a one- and a two-column layout
+    val wide = df.withColumn("k2", col("v") % 5)
+    Seq(Seq("k"), Seq("k", "k2")).foreach { cols =>
+      val ck = Bridge.localCheckpointHashPartitioned(
+        wide.repartition(4, cols.map(col): _*), 4, cols: _*)
+      val placed = ck.select(spark_partition_id().as("pid"),
+          pmod(hash(cols.map(col): _*), lit(4)).as("want"))
+        .groupBy(col("pid"), col("want")).count().collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+      assert(placed.forall { case (pid, want, _) => pid == want },
+        s"rows outside their declared partition for $cols: ${placed.toSeq}")
+      assert(placed.map(_._3).sum == 1000L && placed.length > 1, placed.toSeq)
+      Bridge.unpersistLocalCheckpoint(ck)
+    }
+  }
+
   private def rejectedWithoutJobs(input: DataFrame, n: Int, cols: String*): Unit = {
     val (ex, jobs) = JobCounter(spark) {
       intercept[IllegalArgumentException](Bridge.localCheckpointHashPartitioned(input, n, cols: _*))

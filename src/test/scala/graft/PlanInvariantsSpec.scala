@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.functions.{count, lit}
+
 /** Repo-wide physical-plan invariants over EVERY declared query — the
   * scale-discipline gate: a future query (or a Spark planner change)
   * that introduces an unbounded cartesian stage should fail CI, not
@@ -155,11 +159,19 @@ class PlanInvariantsSpec extends SparkSuite {
       "one-row round-max normalization scalar cross per half-round (plan-stable form)",
   )
 
+  /** Every declared query, built once at sf0.001 for the every-query
+    * checks below (or the exception its build threw).
+    */
+  private lazy val built: Seq[(String, Either[Exception, DataFrame])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (try Right(fn(spark, sf0001)) catch { case e: Exception => Left(e) })
+    }
+
   test("no declared query plans an unbounded cartesian stage") {
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    built.foreach { case (name, df) =>
       val plan =
-        try fn(spark, sf0001).queryExecution.executedPlan.toString
+        try df.fold(e => throw e, _.queryExecution.executedPlan.toString)
         catch { case e: Exception => s"PLAN-BUILD-FAILED: $e" }
       val nested = plan.contains("CartesianProduct") ||
         plan.contains("BroadcastNestedLoopJoin")
@@ -169,6 +181,20 @@ class PlanInvariantsSpec extends SparkSuite {
         offenders += s"$name: nested-loop stage without declared bound"
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("every query that loses joins under count() is consumed fully by the bench") {
+    // the quality_model_score lesson (r15): Catalyst eliminates an outer
+    // join on a unique key whose right side no column references, so a
+    // bare count() would time less than any real consumer pays — such a
+    // query must be in Bench.materializeFully (consumed via toRdd)
+    def joins(p: LogicalPlan): Int = p.collect { case j: Join => j }.size
+    val underCounted = built.collect { case (name, Right(df))
+        if joins(df.agg(count(lit(1))).queryExecution.optimizedPlan) <
+          joins(df.queryExecution.optimizedPlan) => name }
+    val missing = underCounted.filterNot(Bench.materializeFully)
+    assert(missing.isEmpty,
+      s"joins vanish under count() but not in Bench.materializeFully: $missing")
   }
 
   test("every allowlisted bounded nested-loop query still exists") {

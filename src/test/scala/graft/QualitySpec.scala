@@ -626,6 +626,18 @@ class QualitySpec extends SparkSuite {
       "no operating point with TPR > FPR — the card carries no signal")
   }
 
+  test("quality_model_train leaves the token counts a lazily built ROC card reads cached") {
+    // roc persists the shared tokenCounts block and reads it lazily;
+    // training on the same plan must not release a block it did not cache
+    val counts = Quality.tokenCounts(graft.sources.Tables.documents(spark, sf0001))
+    val roc = Quality.qualityModelRoc(spark, sf0001)
+    assert(counts.storageLevel.useMemory, "the ROC card did not cache the token counts")
+    Quality.qualityModelTrain(spark, sf0001).collect()
+    assert(counts.storageLevel.useMemory, "training released the ROC card's token counts")
+    assert(roc.collect().nonEmpty)
+    counts.unpersist()
+  }
+
   test("perplexity_filter: interpolated trigram micro-nats and CCNet tertiles match a driver recompute") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select(col("doc_id"), col("text")).collect()

@@ -110,18 +110,36 @@ class SharedRewriteSpec extends SparkSuite {
     assert(graft.streaming.Sessions.sessionTable(spark, sf0001).count() > 0)
   }
 
-  test("no cache is hand-rolled outside MaterializedCaches") {
-    // a per-(session, dir) memo that bypasses SessionCache escapes
-    // invalidateAll; every such memo so far was a TrieMap field
+  /** Main sources (paths relative to src/main/scala) in which `pattern`
+    * matches, other than the `allowed` files.
+    */
+  private def mainSourcesMatching(pattern: String, allowed: Set[String]): List[String] = {
     import java.nio.file.{Files, Path}
     import scala.jdk.CollectionConverters._
     val root = Path.of("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root, not ${Path.of("").toAbsolutePath}")
-    val offenders = scala.util.Using.resource(Files.walk(root))(_.iterator().asScala
+    scala.util.Using.resource(Files.walk(root))(_.iterator().asScala
       .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "MaterializedCaches.scala" &&
-        Files.readString(p).contains("TrieMap"))
+        pattern.r.findFirstIn(Files.readString(p)).isDefined)
+      .map(p => root.relativize(p).toString)
+      .filterNot(allowed)
       .toList)
+  }
+
+  test("no cache is hand-rolled outside MaterializedCaches") {
+    // a per-(session, dir) memo that bypasses SessionCache escapes
+    // invalidateAll; every such memo so far was a TrieMap field
+    val offenders = mainSourcesMatching("TrieMap", Set("graft/MaterializedCaches.scala"))
     assert(offenders.isEmpty, s"TrieMap outside MaterializedCaches.scala: $offenders")
+  }
+
+  test("no entry point builds its own session outside GraftSession") {
+    // a hand-rolled builder lacks the GraftExtensions rewrite rule, so a
+    // query's plan would depend on whether an earlier query installed it
+    // at runtime; TopKBench's window arm needs a session without the rule.
+    // Matches `builder()`, `builder.master(..)` and a call split over lines.
+    val offenders = mainSourcesMatching(raw"SparkSession\s*\.\s*builder\b",
+      Set("graft/GraftSession.scala", "graft/examples/TopKBench.scala"))
+    assert(offenders.isEmpty, s"SparkSession.builder outside GraftSession.scala: $offenders")
   }
 }
