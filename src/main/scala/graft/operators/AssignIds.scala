@@ -53,7 +53,7 @@ object AssignIds {
   def byOrder(df: DataFrame, order: Seq[Column], idCol: String): DataFrame = {
     val spark = df.sparkSession
     val sorted = layout(df, order)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.MaterializedCaches.persistOnce(sorted) // MEMORY_AND_DISK, the default
     val schema = sorted.schema.add(idCol, LongType, nullable = false)
     val withId = sorted.rdd.zipWithIndex().map { case (row, i) =>
       Row.fromSeq(row.toSeq :+ (i + 1L))

@@ -742,8 +742,7 @@ object Dedup {
       .select(col("cell"),
         least(col("g"), col("j")).as("g1"), greatest(col("g"), col("j")).as("g2"),
         col("g"), col("vec_id"), col("embedding"))
-      .persist()
-    registerTemp(sh)
+    if (graft.MaterializedCaches.persistOnce(sh)) registerTemp(sh)
     val a = sh.select(col("cell"), col("g1"), col("g2"), col("g").as("ga"),
       col("vec_id").as("id1"), col("embedding").as("e1"))
     val b = sh.select(col("cell"), col("g1"), col("g2"), col("g").as("gb"),

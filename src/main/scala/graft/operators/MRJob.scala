@@ -1,7 +1,13 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+import scala.reflect.classTag
+
 import graft.functions.Djb2Partitioner
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoders, ExpressionEncoder}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.TaskContext
 
 /** The reference's user-programmable MapReduce surface
@@ -11,8 +17,8 @@ import org.apache.spark.TaskContext
   * Semantic mapping (SURVEY.md §2 tier A):
   *   - `Mapper`  (`void (*)(char *file_name)` + `MR_Emit`) — a UDTF:
   *     one input line -> many (key, value) emits. Here: `String =>
-  *     IterableOnce[(K, V)]` run through `Dataset.flatMap` (distributed,
-  *     no driver-side loops).
+  *     IterableOnce[(K, V)]` run inside `Dataset.mapPartitions`
+  *     (distributed, no driver-side loops).
   *   - `MR_Partitioner` (djb2 % P, `mapreduce.c:154-160`) — Spark's
   *     HashPartitioning by default; [[runPartitioned]] uses the byte-exact
   *     [[Djb2Partitioner]] when layout parity matters.
@@ -25,10 +31,19 @@ import org.apache.spark.TaskContext
   *     (`threadpool.c:178-186`) is actually race-free; we implement the
   *     *intended* semantics per SURVEY.md §3.4.
   *
-  * The engine's execution is left entirely to Catalyst/Tungsten: the shim
-  * only declares the dataflow. It exists so a reference user can bring
-  * arbitrary mapper/reducer pairs — relational queries should use the
-  * DataFrame API directly (graft.queries).
+  * [[run]] and [[runAgg]] share one in-mapper combine: each map task
+  * folds its emits per key in a JVM hash map and ships one row per key
+  * per flush, instead of one row per emit (the reference ships every
+  * emit). A task flushes when it holds [[FlushBound]] buffered values
+  * (`run`) or distinct keys (`runAgg`), so its memory does not grow with
+  * the input. The results stay exact because the reduce side merges any
+  * number of partial rows per key: a key split across flushes or tasks,
+  * or whose JVM equality is finer than Spark's grouping (`Array[Byte]`
+  * compares by identity), only combines less. Everything after the
+  * combine — shuffle, grouping, reduce — is Catalyst/Tungsten's. The shim
+  * exists so a reference user can bring arbitrary mapper/reducer pairs —
+  * relational queries should use the DataFrame API directly
+  * (graft.queries).
   */
 object MRJob {
 
@@ -111,55 +126,82 @@ object MRJob {
       }.toDS()
   }
 
+  /** Buffered values (`run`) or distinct keys (`runAgg`) at which a map
+    * task flushes its combined rows to the shuffle.
+    */
+  private[graft] val FlushBound: Int = 1 << 16
+
   /** MR_Run with the intended (race-free) semantics: map -> shuffle on key
     * -> grouped reduce. Returns the reducer's output dataset.
+    *
+    * Each map task packs a key's values into one `Seq[V]` row per flush
+    * (see the object doc); the reducer gets the concatenation of a key's
+    * rows, so it still sees every emitted value, in unspecified order as
+    * in the reference. `kv` is unused and kept for source compatibility.
     */
   def run[K: Encoder, V: Encoder, OUT: Encoder](
       input: Dataset[String],
       mapper: String => IterableOnce[(K, V)],
       reducer: (K, Iterator[V]) => OUT)(
-      implicit kv: Encoder[(K, V)]): Dataset[OUT] =
+      implicit kv: Encoder[(K, V)]): Dataset[OUT] = {
+    val values: Encoder[Seq[V]] = ExpressionEncoder(AgnosticEncoders.IterableEncoder(
+      classTag[Seq[V]], AgnosticEncoders.agnosticEncoderFor(implicitly[Encoder[V]]),
+      containsNull = true, lenientSerialization = false))
     input
-      .flatMap(mapper)
+      .mapPartitions(lines => new InMapperCombiner[K, V, Seq[V]](
+        lines, mapper, () => Nil, (vs, v) => v +: vs, perValue = true))(
+        Encoders.tuple(implicitly[Encoder[K]], values))
       .groupByKey(_._1)
-      .mapGroups((k, it) => reducer(k, it.map(_._2)))
+      .mapGroups((k, it) => reducer(k, it.flatMap(_._2.iterator)))
+  }
 
   /** MR_Run with a typed Aggregator reducer: same API shape as [[run]] but
-    * the reduction is an `Aggregator[V, B, OUT]`, which Catalyst executes
-    * with map-side partial aggregation — at scale, the shuffle carries one
-    * buffer per (task, key) instead of every emitted value. Prefer this
-    * over [[run]] whenever the reduction is associative (the reference's
-    * count reducer is; see [[MRAggregators.CountValues]]).
+    * the reduction is an `Aggregator[V, B, OUT]`. Each map task folds its
+    * emits into one `B` per key with `zero`/`reduce` (see the object doc);
+    * the reduce side merges a key's partial buffers with `merge` and ends
+    * with `finish`. Prefer this over [[run]] whenever the reduction is
+    * associative (the reference's count reducer is; see
+    * [[MRAggregators.CountValues]]): the shuffle then carries one buffer,
+    * not a list of values, per key and flush. `kv` is unused and kept
+    * for source compatibility.
     */
   def runAgg[K: Encoder, V: Encoder, B, OUT](
       input: Dataset[String],
       mapper: String => IterableOnce[(K, V)],
-      reducer: org.apache.spark.sql.expressions.Aggregator[V, B, OUT])(
+      reducer: Aggregator[V, B, OUT])(
       implicit kv: Encoder[(K, V)], kout: Encoder[(K, OUT)]): Dataset[(K, OUT)] =
     input
-      .flatMap(mapper)
+      .mapPartitions(lines => new InMapperCombiner[K, V, B](
+        lines, mapper, () => reducer.zero, reducer.reduce, perValue = false))(
+        Encoders.tuple(implicitly[Encoder[K]], reducer.bufferEncoder))
       .groupByKey(_._1)
-      .mapValues((kvp: (K, V)) => kvp._2)(implicitly[Encoder[V]])
-      .agg(reducer.toColumn)
+      .mapValues(_._2)(reducer.bufferEncoder)
+      .agg(new MergePartials(reducer).toColumn)
 
-  /** Streaming MR_Run: the same mapper/aggregator pair over an unbounded
-    * text stream (`readStream.text`), producing a continuously-updated
-    * grouped result — run with `outputMode("complete")` or "update".
-    * The reference has no streaming story; this is the Spark-native
-    * extension of its map -> shuffle -> reduce contract to streams.
+  /** Streaming MR_Run: [[runAgg]] over an unbounded text stream
+    * (`readStream.text`), producing a continuously-updated grouped result
+    * — run with `outputMode("complete")` or "update". The reference has
+    * no streaming story; this is the Spark-native extension of its map ->
+    * shuffle -> reduce contract to streams.
     */
   def runStreaming[K: Encoder, V: Encoder, B, OUT](
       spark: SparkSession,
       inputDir: String,
       mapper: String => IterableOnce[(K, V)],
-      reducer: org.apache.spark.sql.expressions.Aggregator[V, B, OUT])(
-      implicit kv: Encoder[(K, V)], kout: Encoder[(K, OUT)]): Dataset[(K, OUT)] = {
-    import spark.implicits._
-    spark.readStream.text(inputDir).as[String]
-      .flatMap(mapper)
-      .groupByKey(_._1)
-      .mapValues((kvp: (K, V)) => kvp._2)(implicitly[Encoder[V]])
-      .agg(reducer.toColumn)
+      reducer: Aggregator[V, B, OUT])(
+      implicit kv: Encoder[(K, V)], kout: Encoder[(K, OUT)]): Dataset[(K, OUT)] =
+    runAgg(spark.readStream.text(inputDir).as(Encoders.STRING), mapper, reducer)
+
+  /** The reference's shuffle (`mapreduce.c:113,123-141`) as one Spark
+    * shuffle: djb2(key) % P routing, so physical partition == reference
+    * partition id, and keys in strcmp order within each partition —
+    * unsigned UTF-8 bytes, not the JVM's UTF-16 code-unit order (the two
+    * diverge for supplementary code points).
+    */
+  private[operators] def djb2Sorted(kv: RDD[(String, String)], numPartitions: Int): RDD[(String, String)] = {
+    implicit val strcmpOrder: Ordering[String] = graft.functions.Utf8ByteOrdering
+    new org.apache.spark.rdd.OrderedRDDFunctions[String, String, (String, String)](kv)
+      .repartitionAndSortWithinPartitions(new Djb2Partitioner(numPartitions))
   }
 
   /** MR_Run with byte-exact partition layout parity: djb2(key) % P routing
@@ -179,19 +221,68 @@ object MRJob {
       mapper: String => IterableOnce[(String, String)],
       reducer: (Int, String, Iterator[String]) => OUT,
       numPartitions: Int): Dataset[OUT] = {
-    import org.apache.spark.rdd.RDD
-    // strcmp parity: sort on unsigned UTF-8 bytes, not the JVM's UTF-16
-    // code-unit order — the two diverge for supplementary code points.
-    implicit val strcmpOrder: Ordering[String] = graft.functions.Utf8ByteOrdering
-    val emitted: RDD[(String, String)] = input.rdd.flatMap(mapper)
-    val sorted = new org.apache.spark.rdd.OrderedRDDFunctions[String, String, (String, String)](emitted)
-      .repartitionAndSortWithinPartitions(new Djb2Partitioner(numPartitions))
-    val out = sorted.mapPartitions { it =>
+    val out = djb2Sorted(input.rdd.flatMap(mapper), numPartitions).mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       new GroupedKeyIterator(it).map { case (k, vs) => reducer(pid, k, vs) }
     }
     spark.createDataset(out)
   }
+}
+
+/** One map task's side of the in-mapper combine that [[MRJob.run]] and
+  * [[MRJob.runAgg]] share (see [[MRJob]]): pulls the task's lines through
+  * `mapper` and folds each emitted `(k, v)` into `k`'s buffer
+  * (`fold(zero(), v)` for a new key) in a JVM hash map. When the map
+  * holds [[MRJob.FlushBound]] values (`perValue`) or distinct keys, or the
+  * lines run out, it hands out one `(k, buffer)` row per key and starts
+  * an empty map; a line's emits may span two flushes. Buffers are never
+  * touched after they are handed out, so a `fold` that mutates and
+  * returns its buffer is safe.
+  */
+private final class InMapperCombiner[K, V, B](
+    lines: Iterator[String],
+    mapper: String => IterableOnce[(K, V)],
+    zero: () => B,
+    fold: (B, V) => B,
+    perValue: Boolean) extends Iterator[(K, B)] {
+  private var emits: Iterator[(K, V)] = Iterator.empty
+  private var out: Iterator[(K, B)] = Iterator.empty
+
+  override def hasNext: Boolean = out.hasNext || { fill(); out.hasNext }
+
+  override def next(): (K, B) = if (hasNext) out.next() else Iterator.empty.next()
+
+  private def pending: Boolean = {
+    while (!emits.hasNext && lines.hasNext) emits = mapper(lines.next()).iterator
+    emits.hasNext
+  }
+
+  private def fill(): Unit = {
+    val buf = new java.util.HashMap[K, B]()
+    var n = 0
+    while (n < MRJob.FlushBound && pending) {
+      val (k, v) = emits.next()
+      val old = buf.get(k)
+      if (old == null && !buf.containsKey(k)) {
+        buf.put(k, fold(zero(), v)); n += 1
+      } else {
+        buf.put(k, fold(old, v)); if (perValue) n += 1
+      }
+    }
+    out = buf.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue))
+  }
+}
+
+/** The reduce side of [[MRJob.runAgg]]: `agg`'s partial buffers in, merged
+  * with `merge` and ended with `finish`.
+  */
+private final class MergePartials[B, OUT](agg: Aggregator[_, B, OUT]) extends Aggregator[B, B, OUT] {
+  override def zero: B = agg.zero
+  override def reduce(b: B, partial: B): B = agg.merge(b, partial)
+  override def merge(b1: B, b2: B): B = agg.merge(b1, b2)
+  override def finish(b: B): OUT = agg.finish(b)
+  override def bufferEncoder: Encoder[B] = agg.bufferEncoder
+  override def outputEncoder: Encoder[OUT] = agg.outputEncoder
 }
 
 /** Streaming adjacent-equal-key grouper over a sorted (K,V) iterator —
@@ -233,9 +324,13 @@ final class GroupedKeyIterator(it: Iterator[(String, String)])
 
 /** Typed UDAF surface matching the reference's Reducer hook
   * (`mapreduce.h:6`, `distwc.c:24-35`): the user's fold over the value
-  * cursor, expressed as an `org.apache.spark.sql.expressions.Aggregator`
-  * so Catalyst runs it with partial (map-side) aggregation — unlike
-  * `mapGroups`, which must see all values post-shuffle.
+  * cursor, expressed as an `org.apache.spark.sql.expressions.Aggregator`.
+  * Under [[MRJob.runAgg]] each map task runs `zero`/`reduce` per key in
+  * its in-mapper combine and ships one buffer per key and flush; the
+  * reduce side folds those with `merge` and ends with `finish`. A
+  * `reduce` or `merge` may mutate and return its first buffer. As plain
+  * `groupBy().agg` aggregates, Catalyst runs the same functions with its
+  * own partial (map-side) aggregation.
   */
 object MRAggregators {
   import org.apache.spark.sql.{Encoder, Encoders}

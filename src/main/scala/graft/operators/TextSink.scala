@@ -4,7 +4,6 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import graft.functions.Djb2Partitioner
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -13,13 +12,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ascending byte order within each file, partition = djb2(key) % P
   * (`mapreduce.c:113`).
   *
-  * One shuffle total: `repartitionAndSortWithinPartitions` with the
-  * byte-exact [[Djb2Partitioner]] makes physical partition == reference
-  * partition id, then each executor streams its own partition straight to
-  * its file — no driver collect, so the pattern scales to a real cluster
-  * writing to a shared filesystem. Empty partitions produce no file, like
-  * the reference (the reducer only opens `result-<p>.txt` when it has a
-  * key to write).
+  * One shuffle total: [[MRJob.djb2Sorted]] (the byte-exact
+  * [[graft.functions.Djb2Partitioner]], keys in strcmp order) makes
+  * physical partition == reference partition id, then each executor
+  * streams its own partition straight to its file — no driver collect, so
+  * the pattern scales to a real cluster writing to a shared filesystem.
+  * Empty partitions produce no file, like the reference (the reducer only
+  * opens `result-<p>.txt` when it has a key to write).
   */
 object TextSink {
 
@@ -32,12 +31,7 @@ object TextSink {
     import spark.implicits._
     val kv = df.selectExpr("CAST(key AS STRING)", "CAST(value AS STRING)")
       .as[(String, String)].rdd
-    // strcmp parity: unsigned UTF-8 byte order, like the reference's
-    // sorted insert — not the JVM's UTF-16 code-unit order.
-    implicit val strcmpOrder: Ordering[String] = graft.functions.Utf8ByteOrdering
-    val sorted = new org.apache.spark.rdd.OrderedRDDFunctions[String, String, (String, String)](kv)
-      .repartitionAndSortWithinPartitions(new Djb2Partitioner(numPartitions))
-    sorted.foreachPartition { rows =>
+    MRJob.djb2Sorted(kv, numPartitions).foreachPartition { rows =>
       if (rows.hasNext) {
         val pid = TaskContext.getPartitionId()
         // stream row-by-row: a skewed multi-GB partition must not be

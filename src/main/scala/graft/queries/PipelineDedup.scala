@@ -783,8 +783,8 @@ private[queries] trait PipelineDedup extends PipelineBase { this: Pipeline.type 
     * the ladder scales like wordcount at any corpus size.
     */
   def duplicateSpanLadder(s: SparkSession, d: String): DataFrame = {
-    val t = docs(s, d)
-      .select(col("doc_id"), Dedup.tokensNE(col("text")).as("ts")).persist()
+    val t = docs(s, d).select(col("doc_id"), Dedup.tokensNE(col("text")).as("ts"))
+    graft.MaterializedCaches.persistOnce(t)
     val tot = broadcast(t.agg(sum(size(col("ts"))).as("total_slots")))
     val rungs = Seq(8, 16, 32).map { w =>
       val sp = t.filter(size(col("ts")) >= w)

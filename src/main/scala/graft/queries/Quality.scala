@@ -94,17 +94,10 @@ object Quality {
     * with term counts normalized to integer per-mille of the doc's
     * token count — the battery's rules are RATIO tests, so the
     * learnable signal is in ratios, not raw counts (a raw-count model
-    * mostly learns document length; measured during design).
-    */
-  // takes the document frame (not just the dir) so the streaming scorer
-  // can featurize an ingest batch through the SAME definition (the
-  // audioFingerprintOfDocs convention)
-  private[graft] def qmFeaturesOfDocs(s: SparkSession,
-      dd: DataFrame): DataFrame = qmFeaturesOfCounts(tokenCounts(dd))
-
-  /** The featurizer over the shared [[tokenCounts]] grain: per-bucket
-    * term frequency recovered exactly as Σ c over the bucket's tokens
-    * (identical to counting raw occurrences — marginals-from-the-cube).
+    * mostly learns document length; measured during design). Built
+    * over the shared [[tokenCounts]] grain: per-bucket term frequency
+    * recovered exactly as Σ c over the bucket's tokens (identical to
+    * counting raw occurrences — marginals-from-the-cube).
     */
   private def qmFeaturesOfCounts(g: DataFrame): DataFrame = {
     val tf = g
@@ -769,7 +762,7 @@ object Quality {
           ab.getField("w2").as("w2"), c.as("w3")))).as("tg"))
       .select(col("doc_id"), col("tg.w1").as("w1"),
         col("tg.w2").as("w2"), col("tg.w3").as("w3"))
-      .persist() // feeds the c123 aggregate + the probe (the setsim lesson)
+    MaterializedCaches.persistOnce(tri) // feeds the c123 aggregate + the probe (the setsim lesson)
     // Every LM marginal is a re-aggregation of c123 itself (c12 = Σ_w3,
     // c23 = Σ_w1, c2 = Σ_{w1,w3}, c3 = Σ_{w1,w2}, n = Σ all) — counts
     // identical by definition, so the slot stream is shuffled ONCE for
@@ -807,7 +800,7 @@ object Quality {
       .agg(count(lit(1)).as("n_slots"), (-sum(col("lp_micro"))).as("surprisal_micro"))
       .selectExpr("doc_id", "n_slots",
         "surprisal_micro div n_slots AS ppl_micro")
-      .persist()
+    MaterializedCaches.persistOnce(sc)
     val ranked = graft.operators.AssignIds.byOrder(
       sc, Seq(col("ppl_micro"), col("doc_id")), "rn")
     val nd = broadcast(sc.groupBy().agg(count(lit(1)).as("nd")))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** File-format connectors. The reference reads local plain text only
@@ -41,14 +41,6 @@ object Sources {
     */
   def avro(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     AvroSource.read(spark, dir, schema)
-
-  def writeAvro(df: DataFrame, dir: String): Unit =
-    AvroSource.write(df, dir)
-
-  def textLines(spark: SparkSession, path: String): Dataset[String] = {
-    import spark.implicits._
-    spark.read.textFile(path)
-  }
 
   /** Round-trip helpers (sinks). Partitioned writes keep downstream scans
     * prunable on the partition column.

@@ -1,8 +1,13 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
-import graft.operators.{GroupedKeyIterator, MRJob, TextSink}
+import graft.operators.{GroupedKeyIterator, MRAggregators, MRJob, TextSink}
+import org.apache.spark.graft.JobCounter
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 
 /** The MR capability surface (SURVEY.md §2 tier A) against the reference
   * corpus's invariants ([[ReferenceCorpus]]) and the reference's
@@ -15,10 +20,29 @@ object MRJobSpec {
     */
   def wcMapper(line: String): IterableOnce[(String, String)] =
     line.split("[ \t\n\r]", -1).iterator.map(t => (t, "1"))
+
+  /** Space-split tokens, each with its length as the value. */
+  def lengthMapper(line: String): IterableOnce[(String, Long)] =
+    line.split(" ").iterator.map(t => (t, t.length.toLong))
+
+  /** Count and sum of the values in one `Array[Long]` buffer that
+    * `reduce` and `merge` mutate and return.
+    */
+  class MutatingCountSum extends Aggregator[Long, Array[Long], (Long, Long)] {
+    override def zero: Array[Long] = Array(0L, 0L)
+    override def reduce(b: Array[Long], v: Long): Array[Long] = { b(0) += 1; b(1) += v; b }
+    override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
+      b1(0) += b2(0); b1(1) += b2(1); b1
+    }
+    override def finish(b: Array[Long]): (Long, Long) = (b(0), b(1))
+    override def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    override def outputEncoder: Encoder[(Long, Long)] =
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+  }
 }
 
 class MRJobSpec extends SparkSuite {
-  import MRJobSpec.wcMapper
+  import MRJobSpec.{lengthMapper, wcMapper}
 
   test("wordcount over the reference corpus: every word exactly 5000") {
     import spark.implicits._
@@ -78,6 +102,98 @@ class MRJobSpec extends SparkSuite {
       spark.createDataset(linesSeq), wcMapper, (k, vs) => (k, vs.size.toLong))
       .collect().toMap
     assert(got == expected)
+    val viaAgg = MRJob.runAgg[String, String, Long, Long](
+      spark.createDataset(linesSeq), wcMapper, new MRAggregators.CountValues[String])
+      .collect().toMap
+    assert(viaAgg == expected)
+  }
+
+  /** One map task over 200 k tokens drawn from 1.5 x FlushBound keys:
+    * more distinct keys, and more values, than one flush holds. Returns
+    * the input and each token's (count, summed length).
+    */
+  private def pastFlushBound = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val keys = MRJob.FlushBound * 3 / 2
+    val lines = Seq.fill(2000)(Seq.fill(100)(s"k${rnd.nextInt(keys)}").mkString(" "))
+    val tokens = lines.flatMap(_.split(" "))
+    assert(tokens.distinct.size > MRJob.FlushBound && tokens.size > MRJob.FlushBound)
+    val oneTask = spark.createDataset(spark.sparkContext.parallelize(lines, 1))
+    (oneTask, tokens.groupBy(identity).view
+      .mapValues(ts => (ts.size.toLong, ts.map(_.length.toLong).sum)).toMap)
+  }
+
+  test("in-mapper combine: one task past the flush bound equals a driver fold") {
+    import spark.implicits._
+    val (oneTask, expected) = pastFlushBound
+    val viaRun = MRJob.run[String, Long, (String, Long, Long)](oneTask, lengthMapper,
+      (k, vs) => { val all = vs.toSeq; (k, all.size.toLong, all.sum) })
+      .collect().map { case (k, n, sum) => k -> (n, sum) }.toMap
+    assert(viaRun == expected)
+    val viaAgg = MRJob.runAgg[String, Long, Long, Long](oneTask, lengthMapper,
+      new MRAggregators.CountValues[Long]).collect().toMap
+    assert(viaAgg == expected.view.mapValues(_._1).toMap)
+  }
+
+  test("in-mapper combine: an Aggregator that mutates its buffer stays exact") {
+    import spark.implicits._
+    val (oneTask, expected) = pastFlushBound
+    val got = MRJob.runAgg[String, Long, Array[Long], (Long, Long)](oneTask, lengthMapper,
+      new MRJobSpec.MutatingCountSum).collect().toMap
+    assert(got == expected)
+  }
+
+  test("in-mapper combine: Array[Byte] keys (identity equality on the JVM) count exactly") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val vocab = Vector("x", "y", "zz", "This", "", "a-b", "\u00e9t\u00e9")
+    val lines = Seq.fill(1000)(Seq.fill(100)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    val expected = lines.flatMap(_.split(" ", -1)).groupBy(identity)
+      .view.mapValues(_.size.toLong).toMap
+    val oneTask = spark.createDataset(spark.sparkContext.parallelize(lines, 1))
+    val mapper: String => IterableOnce[(Array[Byte], Long)] =
+      line => line.split(" ", -1).iterator.map(t => (t.getBytes(UTF_8), 1L))
+    val viaRun = MRJob.run[Array[Byte], Long, (String, Long)](oneTask, mapper,
+      (k, vs) => (new String(k, UTF_8), vs.size.toLong)).collect().toMap
+    assert(viaRun == expected)
+    val viaAgg = MRJob.runAgg[Array[Byte], Long, Long, Long](oneTask, mapper,
+      new MRAggregators.CountValues[Long]).collect()
+      .map { case (k, n) => new String(k, UTF_8) -> n }
+    assert(viaAgg.length == expected.size && viaAgg.toMap == expected)
+  }
+
+  test("in-mapper combine: tuple keys group by value, like typed groupByKey") {
+    import spark.implicits._
+    val lines = Seq("a b a", "b c", "a")
+    val mapper: String => IterableOnce[((String, Int), Long)] =
+      line => line.split(" ").iterator.map(t => ((t, t.length), 1L))
+    val expected = Map(("a", 1) -> 3L, ("b", 1) -> 2L, ("c", 1) -> 1L)
+    val viaRun = MRJob.run[(String, Int), Long, ((String, Int), Long)](
+      spark.createDataset(lines), mapper, (k, vs) => (k, vs.sum)).collect().toMap
+    assert(viaRun == expected)
+    val viaAgg = MRJob.runAgg[(String, Int), Long, Long, Long](
+      spark.createDataset(lines), mapper, new MRAggregators.CountValues[Long]).collect().toMap
+    assert(viaAgg == expected)
+  }
+
+  test("in-mapper combine: the shuffle carries one row per key, task and flush, not per token") {
+    import spark.implicits._
+    val input = MRJob.lines(spark, Seq(ReferenceCorpus.dir))
+    val tokens = 21 * 5000
+    val maxRows = input.rdd.getNumPartitions.toLong * (tokens / MRJob.FlushBound + 1) * 21
+    val (viaRun, runRows) = JobCounter.shuffleRecords(spark) {
+      MRJob.run[String, String, (String, Long)](input, wcMapper, (k, vs) => (k, vs.size.toLong))
+        .collect()
+    }
+    assert(viaRun.length == 21 && viaRun.forall(_._2 == 5000L))
+    assert(runRows <= maxRows, s"run wrote $runRows shuffle records, bound $maxRows")
+    val (viaAgg, aggRows) = JobCounter.shuffleRecords(spark) {
+      MRJob.runAgg[String, String, Long, Long](input, wcMapper,
+        new MRAggregators.CountValues[String]).collect()
+    }
+    assert(viaAgg.length == 21 && viaAgg.forall(_._2 == 5000L))
+    assert(aggRows <= maxRows, s"runAgg wrote $aggRows shuffle records, bound $maxRows")
   }
 
   test("GroupedKeyIterator: one call per unique key; unconsumed values skipped") {

@@ -1,27 +1,45 @@
 package org.apache.spark.graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Counts the Spark jobs a block launches. Lives under `org.apache.spark`
-  * to drain the listener bus (`private[spark]`) before and after, so no
-  * job event is lost to the bus's asynchrony.
+/** Counts the Spark jobs a block launches, and the shuffle records its
+  * tasks write. Lives under `org.apache.spark` to drain the listener bus
+  * (`private[spark]`) before and after, so no event is lost to the bus's
+  * asynchrony.
   */
 object JobCounter {
   def apply[T](spark: SparkSession)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
+    val (out, c) = counted(spark)(body)
+    (out, c.jobs.get)
+  }
+
+  /** The block's result and the shuffle records all its tasks wrote. */
+  def shuffleRecords[T](spark: SparkSession)(body: => T): (T, Long) = {
+    val (out, c) = counted(spark)(body)
+    (out, c.shuffleRecords.get)
+  }
+
+  private final class Counts extends SparkListener {
     val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
+    val shuffleRecords = new AtomicLong
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (e.taskMetrics != null)
+        shuffleRecords.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+  }
+
+  private def counted[T](spark: SparkSession)(body: => T): (T, Counts) = {
+    val sc = spark.sparkContext
+    val counts = new Counts
     sc.listenerBus.waitUntilEmpty()
-    sc.addSparkListener(listener)
+    sc.addSparkListener(counts)
     try {
       val out = body
       sc.listenerBus.waitUntilEmpty()
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
+      (out, counts)
+    } finally sc.removeSparkListener(counts)
   }
 }
