@@ -1,16 +1,18 @@
 package graft.examples
 
 import graft.operators.{MRJob, TextSink}
+import graft.sources.ReferenceCorpus
 
 /** End-to-end example: the reference's distwc.c program written against
   * this library's MR surface — map (tokenize, empties kept) -> djb2-
   * partitioned sorted shuffle -> grouped count -> result-<p>.txt files.
   *
-  * Usage: runMain graft.examples.WordCountExample <inputDir> <outDir>
+  * Usage: runMain graft.examples.WordCountExample [inputDir] [outDir]
+  * (inputDir defaults to the seeded [[ReferenceCorpus]]).
   */
 object WordCountExample {
   def main(args: Array[String]): Unit = {
-    val inputDir = if (args.length > 0) args(0) else "/root/reference/sample_inputs"
+    val inputDir = if (args.length > 0) args(0) else ReferenceCorpus.dir
     val outDir = if (args.length > 1) args(1) else "/tmp/graft-wc-out"
     val spark = graft.GraftSession.getOrCreate(
       s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.functions.{Djb2, TextFns}
-import graft.sources.Tables
+import graft.sources.{ReferenceCorpus, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,12 +37,14 @@ object Core {
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("token"))
 
-  /** Word count over the reference's own sample corpus, whole-file reads
-    * (A1/A2; golden invariant: 21 words x 5000, FIXTURES.md §1).
+  /** Word count over the reference's sample corpus, whole-file reads
+    * (A1/A2; golden invariant: 21 words x 5000, FIXTURES.md §1). Reads
+    * [[ReferenceCorpus]], the seeded in-repo stand-in that holds every §1
+    * invariant, so the query needs no files outside the checkout.
     */
   def wordcountFiles(s: SparkSession, d: String): DataFrame =
     s.read.option("wholetext", "true")
-      .text("/root/reference/sample_inputs")
+      .text(ReferenceCorpus.dir)
       .select(TextFns.explodedTokens(col("value")).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("cnt"))
@@ -348,7 +350,8 @@ object Core {
     "weighted_avg_agg" -> weightedAvgAgg,
   )
 
-  val oracleSql: Map[String, String] = Map(
+  /** A def, so initialising `Core` does not write the corpus. */
+  def oracleSql: Map[String, String] = Map(
     "weighted_avg_agg" ->
       """SELECT l_returnflag,
         |  (sum(CAST(l_quantity AS BIGINT) * CAST(round(l_extendedprice * 100) AS BIGINT))
@@ -356,11 +359,13 @@ object Core {
         |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
     "wordcount" ->
       s"""SELECT token, count(*)::BIGINT AS cnt FROM ($TokSql) GROUP BY token ORDER BY token""",
+    // concatenated, not s"""…""": an interpolator would turn the regex's
+    // \t\n\r escapes into raw characters
     "wordcount_files" ->
-      """SELECT token, count(*)::BIGINT AS cnt
+      ("""SELECT token, count(*)::BIGINT AS cnt
         | FROM (SELECT unnest(string_split_regex(content, '[ \t\n\r]')) AS token
-        |       FROM read_text('/root/reference/sample_inputs/*.txt'))
-        | GROUP BY token ORDER BY token""".stripMargin,
+        |       FROM read_text('""" + ReferenceCorpus.dir + """/*.txt'))
+        | GROUP BY token ORDER BY token""").stripMargin,
     // partitioned_wc: omitted — djb2 not pure-SQL; golden-tested instead.
     "distinct_tokens" ->
       s"""SELECT DISTINCT token FROM ($TokSql) ORDER BY token""",

@@ -1,21 +1,29 @@
-package graft
+package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-/** An in-repo stand-in for the reference corpus (FIXTURES.md §1), so the
-  * golden word-count tests need no files outside the checkout: 20
-  * single-line files (`sample1.txt` … `sample20.txt`, single spaces, no
-  * trailing newline) over the 21-word vocabulary, each word exactly 5000
-  * times, in a seeded shuffle cut into files of uneven size. Every
-  * invariant the goldens read — the per-word counts, the word set and
-  * the djb2 partition layout — is the reference corpus's.
+/** A seeded, in-repo stand-in for the reference corpus (FIXTURES.md §1,
+  * which names the original's provenance), so the engine reads no files
+  * outside the checkout: 20 single-line files
+  * (`sample1.txt` … `sample20.txt`, single spaces, no trailing newline)
+  * over the 21-word vocabulary, each word exactly 5000 times, in a seeded
+  * shuffle cut into files of uneven size. Every invariant of §1 — the
+  * per-word counts, the word set and the djb2 partition layout — is the
+  * reference corpus's, so a word count over it gives the same result.
+  *
+  * Read by the `wordcount_files` query and its DuckDB oracle
+  * ([[graft.queries.Core]]), by [[graft.examples.WordCountExample]]'s
+  * default input, and by the golden word-count tests.
   */
 object ReferenceCorpus {
 
   val Vocab: Seq[String] = ("This a and each exactly expect five-thousand for input is library " +
     "mapreduce occurs see should test the times to word you").split(" ").toSeq
 
-  /** Directory holding the generated files; written once per JVM. */
+  /** Directory holding the generated files; written once per JVM. It is
+    * not deleted at exit: the DuckDB oracle check reads it after the
+    * `Verify` JVM that named it has stopped.
+    */
   lazy val dir: String = {
     val rnd = new scala.util.Random(20)
     val tokens = rnd.shuffle(Vocab.flatMap(w => Seq.fill(5000)(w)))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.Core
+import graft.sources.ReferenceCorpus
 
 /** Sanity checks per tier-B query (the full hash-compare against DuckDB is
   * the driver's Verify gate; tools/check_oracle.py replicates it locally).
@@ -39,6 +40,13 @@ class CoreQueriesSpec extends SparkSuite {
     assert(rows.forall(_.getLong(1) == 5000L))
     // total ORDER BY: ascending byte order, 'This' first
     assert(rows.head.getString(0) == "This")
+  }
+
+  test("wordcount_files' oracle SQL reads the directory the query reads") {
+    val sql = SparkEntry.oracleSql("wordcount_files")
+    assert(sql.contains(s"read_text('${ReferenceCorpus.dir}/*.txt')"), sql)
+    // the regex keeps its escapes: DuckDB, not Scala, turns them into characters
+    assert(sql.contains("""'[ \t\n\r]'"""), sql)
   }
 
   test("top_k is the 20 highest-count tokens, ties broken by token") {

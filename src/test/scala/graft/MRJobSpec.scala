@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import graft.operators.{GroupedKeyIterator, MRAggregators, MRJob, TextSink}
+import graft.sources.ReferenceCorpus
 import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder

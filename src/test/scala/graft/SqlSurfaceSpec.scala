@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{MRAggregators, MRJob}
+import graft.sources.ReferenceCorpus
 import org.apache.spark.sql.functions._
 
 /** SQL-registered native functions + the typed Aggregator / streaming MR
