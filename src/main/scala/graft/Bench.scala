@@ -66,59 +66,62 @@ object Bench {
     // Each artifact warms in ITS OWN try (BenchWarm.each, spec-gated) —
     // see the rationale on BenchWarm above.
     def warm(name: String)(build: => Any): Unit = BenchWarm.each(name)(build)
-    warm("jvm_parquet") {
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .groupBy("l_returnflag").count().collect()
+    // the shared artifacts stay cached; the warm-up's temporaries do not
+    MaterializedCaches.scoped(spark) {
+      warm("jvm_parquet") {
+        spark.read.parquet(s"$sfDir/lineitem.parquet")
+          .groupBy("l_returnflag").count().collect()
+      }
+      warm("dedup_jit") {
+        val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(50)
+        graft.operators.Dedup.minhash(docs).count()
+        graft.operators.Dedup.simhash(docs).count()
+      }
+      // materialized inputs built once per run (production posture:
+      // session table, IVF coarse quantizer and pair lists are
+      // precomputed artifacts every consumer reads; their BUILD cost is
+      // measured by the producing queries — sessionize, dedup_near,
+      // ngram_jaccard — which deliberately bypass the caches)
+      warm("materialized_inputs") {
+        graft.queries.Pipeline.warmMaterializedInputs(spark, sfDir)
+      }
+      // JIT the iterative-graph path (join/agg/checkpoint round trip) on
+      // a 3-node toy graph — same rationale as the dedup warmup above
+      warm("pagerank_jit") {
+        val toy = spark.range(3).selectExpr("id AS src", "(id + 1) % 3 AS dst")
+        graft.operators.PageRank.run(
+          toy.union(toy.selectExpr("dst AS src", "src AS dst")), 2).count()
+      }
+      // the supplier<->part edge list is a materialized graph artifact
+      // (extracted once, read by every graph job) — built untimed like
+      // the session/centroid/pair tables above
+      warm("edge_table") { graft.queries.Graph.edgeTable(spark, sfDir).count() }
+      // the degree table and the (hub seed, node count) scalars are the
+      // same extracted-once artifacts — profiled once, read by ppr/bfs/
+      // degree-histogram; the queries measure their algorithm, not the
+      // shared profiling job
+      warm("hub_seed") { graft.queries.Graph.hubSeedAndNodes(spark, sfDir) }
+      warm("pr_artifacts") { graft.queries.Graph.prArtifacts(spark, sfDir)._2.count() }
+      // the bipartite-projection pair aggregate — the graph batch's
+      // heaviest shuffle, read by cosupply_neighbors AND adamic_adar
+      warm("supplier_pairs") { graft.queries.Graph.supplierPairAgg(spark, sfDir).count() }
+      // the co-purchase edge list + its degree orientation are the same
+      // kind of extracted-once artifact; triangle_count measures the
+      // wedge generation + closing join, not the edge extraction
+      warm("oriented_edges") { graft.queries.Graph.orientedEdges(spark, sfDir).count() }
+      // the BPE merge table is a trained artifact (the tokenizer is
+      // trained once and shipped to every job); the budget queries
+      // measure ENCODING, not training
+      warm("bpe_merges") { graft.queries.Quality.bpeMerges(spark, sfDir) }
+      // the month-partitioned orders table is an ingest-job artifact
+      // (written once, read by every consumer); dpp_join measures the
+      // pruned read, not the write
+      warm("partitioned_orders") { graft.sources.Layout.partitionedOrders(spark, sfDir) }
+      // the daily-revenue rollup is the same kind of shared artifact —
+      // three time-series queries read it; they measure their analysis,
+      // not the rollup build
+      warm("daily_revenue") { graft.queries.Insights.dailyRevenue(spark, sfDir).count() }
     }
-    warm("dedup_jit") {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(50)
-      graft.operators.Dedup.minhash(docs).count()
-      graft.operators.Dedup.simhash(docs).count()
-    }
-    // materialized inputs built once per run (production posture:
-    // session table, IVF coarse quantizer and pair lists are
-    // precomputed artifacts every consumer reads; their BUILD cost is
-    // measured by the producing queries — sessionize, dedup_near,
-    // ngram_jaccard — which deliberately bypass the caches)
-    warm("materialized_inputs") {
-      graft.queries.Pipeline.warmMaterializedInputs(spark, sfDir)
-    }
-    // JIT the iterative-graph path (join/agg/checkpoint round trip) on
-    // a 3-node toy graph — same rationale as the dedup warmup above
-    warm("pagerank_jit") {
-      val toy = spark.range(3).selectExpr("id AS src", "(id + 1) % 3 AS dst")
-      graft.operators.PageRank.run(
-        toy.union(toy.selectExpr("dst AS src", "src AS dst")), 2).count()
-    }
-    // the supplier<->part edge list is a materialized graph artifact
-    // (extracted once, read by every graph job) — built untimed like
-    // the session/centroid/pair tables above
-    warm("edge_table") { graft.queries.Graph.edgeTable(spark, sfDir).count() }
-    // the degree table and the (hub seed, node count) scalars are the
-    // same extracted-once artifacts — profiled once, read by ppr/bfs/
-    // degree-histogram; the queries measure their algorithm, not the
-    // shared profiling job
-    warm("hub_seed") { graft.queries.Graph.hubSeedAndNodes(spark, sfDir) }
-    warm("pr_artifacts") { graft.queries.Graph.prArtifacts(spark, sfDir)._2.count() }
-    // the bipartite-projection pair aggregate — the graph batch's
-    // heaviest shuffle, read by cosupply_neighbors AND adamic_adar
-    warm("supplier_pairs") { graft.queries.Graph.supplierPairAgg(spark, sfDir).count() }
-    // the co-purchase edge list + its degree orientation are the same
-    // kind of extracted-once artifact; triangle_count measures the
-    // wedge generation + closing join, not the edge extraction
-    warm("oriented_edges") { graft.queries.Graph.orientedEdges(spark, sfDir).count() }
-    // the BPE merge table is a trained artifact (the tokenizer is
-    // trained once and shipped to every job); the budget queries
-    // measure ENCODING, not training
-    warm("bpe_merges") { graft.queries.Quality.bpeMerges(spark, sfDir) }
-    // the month-partitioned orders table is an ingest-job artifact
-    // (written once, read by every consumer); dpp_join measures the
-    // pruned read, not the write
-    warm("partitioned_orders") { graft.sources.Layout.partitionedOrders(spark, sfDir) }
-    // the daily-revenue rollup is the same kind of shared artifact —
-    // three time-series queries read it; they measure their analysis,
-    // not the rollup build
-    warm("daily_revenue") { graft.queries.Insights.dailyRevenue(spark, sfDir).count() }
     // min-of-2 per query: the bench runs on a shared host, and round-4's
     // driver pass burned a review cycle on load ghosts (trivial queries
     // 3-5x inflated). Two timed passes and the min make the number
@@ -133,29 +136,15 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // storage janitor: a query is free to persist() its own reused
-    // intermediates (setsim_join's prefix tables, assoc_rules' pair
-    // base, ...), but across ~180 queries x 2 passes those temporaries
+    // each query runs in its own MaterializedCaches.scoped: across ~180
+    // queries x 2 passes the temporaries a query caches would otherwise
     // accumulate in the 8g bench JVM until late queries pay their GC
-    // bill. After each query, unpersist every RDD that is NOT the
-    // backing storage of a DataFrame held in the SessionCache registry
-    // (MaterializedCaches.allDfs: the warm shared inputs must stay hot —
-    // that is their point).
-    def sweepTemporaries(): Unit = {
-      val protectedIds = MaterializedCaches.allDfs
-        .flatMap(df => try org.apache.spark.sql.graft.Bridge.cachedRddIds(df)
-          catch { case _: Exception => Nil }).toSet
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!protectedIds.contains(id)) rdd.unpersist(blocking = false)
-      }
-    }
-    def pass(name: String, fn: (SparkSession, String) => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      // sweep in finally: a FAILING query must also release its persisted
-      // temporaries, or they tax every subsequent query's memory/GC —
-      // exactly the cross-query contamination the janitor exists to stop.
-      // The clock is read INSIDE the try so the sweep stays untimed.
-      try {
+    // bill, while the warm shared artifacts stay hot. The scope releases
+    // a FAILING query's temporaries too; the clock is read inside it, so
+    // the release stays untimed.
+    def pass(name: String, fn: (SparkSession, String) => DataFrame): Double =
+      try MaterializedCaches.scoped(spark) {
+        val t0 = System.nanoTime()
         consume(name, fn(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
       }
@@ -168,8 +157,6 @@ object Bench {
             String.valueOf(t.getMessage).linesIterator.take(1).mkString).take(400))
           -1.0
       }
-      finally sweepTemporaries()
-    }
     val pass1 = names.map { case (n, fn) => pass(n, fn) }
     val pass2 = names.map { case (n, fn) => pass(n, fn) }
     val results = names.zip(pass1.zip(pass2)).map { case ((name, _), (a, b)) =>

@@ -1,6 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.storage.StorageLevel
 import scala.collection.concurrent.TrieMap
 
@@ -45,39 +47,107 @@ class SessionCache[V](val name: String, release: V => Unit = (_: V) => ()) {
   }
 }
 
-/** A [[SessionCache]] of persisted DataFrames, unpersisted on release. */
+/** A [[SessionCache]] of persisted DataFrames: [[getOrElseUpdate]]
+  * persists the frame it stores, and release unpersists it.
+  */
 final class DfCache(name: String)
-    extends SessionCache[DataFrame](name, _.unpersist(blocking = false))
+    extends SessionCache[DataFrame](name, _.unpersist(blocking = false)) {
+  override def getOrElseUpdate(key: (SparkSession, String), compute: => DataFrame): DataFrame =
+    super.getOrElseUpdate(key, { val df = compute; MaterializedCaches.cacheOnce(df); df })
+}
 
-/** Registry of every [[SessionCache]] in the engine, so one call releases
-  * all shared artifacts (see the staleness caveat on [[SessionCache]]).
+/** The one owner of DataFrame storage: nothing else in the engine calls
+  * `persist` or `unpersist` on a DataFrame. Three calls cache a frame:
+  *   - [[DfCache.getOrElseUpdate]]: a shared artifact, held until its
+  *     cache is cleared ([[invalidateAll]]);
+  *   - [[persistOnce]]: a query-local temporary that the query's lazy
+  *     output reads, recorded and released by the enclosing [[scoped]]
+  *     (or by [[invalidateAll]]);
+  *   - [[persisting]]: a temporary read only by an eager body, released
+  *     when the body returns.
+  *
+  * Spark keeps one cache entry per plan: a second `persist()` of the same
+  * plan only warns "Asked to cache already cached data" and reads the
+  * first entry. So each call caches a frame only when its plan is not
+  * cached yet, and releases only what it cached itself. The release rule:
+  * a temporary goes through `Dataset.unpersist`, which drops the
+  * `CacheManager` entry with the blocks (unpersisting the RDD alone
+  * leaves a stale entry that the next identical plan reads uncached), and
+  * never while its blocks back a [[DfCache]] frame.
   */
 object MaterializedCaches {
   private val all = TrieMap.empty[String, SessionCache[_]]
+  // persistOnce's temporaries, keyed by a sequence number so a scope
+  // releases exactly those recorded since it began
+  private val temps = TrieMap.empty[Long, DataFrame]
+  private val nextTemp = new AtomicLong
 
   // a second cache under one name would hide the first from invalidateAll
   private[graft] def register(c: SessionCache[_]): Unit =
     require(all.putIfAbsent(c.name, c).isEmpty, s"cache name ${c.name} registered twice")
 
-  /** Release and forget every cached shared artifact across all modules. */
-  def invalidateAll(): Unit = all.values.foreach(_.clear())
+  /** Release and forget every cached shared artifact and every recorded
+    * temporary across all modules.
+    */
+  def invalidateAll(): Unit = { all.values.foreach(_.clear()); releaseTemps(0L) }
 
   /** Each registered cache's name with its entry count, by name. */
   private[graft] def registered: Seq[(String, Int)] =
     all.toSeq.map { case (n, c) => n -> c.values.size }.sortBy(_._1)
 
   /** Persist `df` unless its plan is already cached; true when this call
-    * cached it. Spark keeps one cache entry per plan: a second persist()
-    * only warns "Asked to cache already cached data" and reads the first
-    * entry, and only the caller that cached it may unpersist it — a lazy
-    * frame built earlier on the same plan still reads it.
+    * cached it.
     */
-  def persistOnce(df: DataFrame): Boolean =
+  private[graft] def cacheOnce(df: DataFrame): Boolean =
     df.storageLevel == StorageLevel.NONE && { df.persist(); true }
 
-  /** Every DataFrame currently held by any [[DfCache]] — the protected
-    * set for the bench's between-queries storage janitor.
+  /** `df`, persisted unless its plan is already cached; a frame this call
+    * cached is recorded as a temporary of the enclosing [[scoped]].
     */
+  def persistOnce(df: DataFrame): DataFrame = {
+    if (cacheOnce(df)) temps.put(nextTemp.getAndIncrement(), df)
+    df
+  }
+
+  /** Run `body` with `dfs` persisted (in order, so a later frame's cached
+    * plan reads an earlier one), then release those this call cached.
+    */
+  def persisting[T](dfs: DataFrame*)(body: => T): T = {
+    val cached = dfs.filter(cacheOnce)
+    try body finally cached.reverse.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Run `body`, then release what it cached: first each temporary
+    * [[persistOnce]] recorded during `body`, then every RDD persisted
+    * during `body` (the [[graft.operators.Iterate]] and `localCheckpoint`
+    * blocks), in both cases unless its blocks back a [[DfCache]] frame.
+    */
+  def scoped[T](spark: SparkSession)(body: => T): T = {
+    val from = nextTemp.get
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try body finally {
+      val held = releaseTemps(from)
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!before(id) && !held(id)) rdd.unpersist(blocking = false)
+      }
+    }
+  }
+
+  /** Unpersists the temporaries recorded since `from` whose blocks back
+    * no [[DfCache]] frame (and forgets them all); returns the ids of the
+    * RDDs backing DfCache frames.
+    */
+  private def releaseTemps(from: Long): Set[Int] = {
+    val held = allDfs.flatMap(df =>
+      try Bridge.cachedRddIds(df) catch { case _: Exception => Nil }).toSet
+    temps.keys.filter(_ >= from).foreach(k => temps.remove(k).foreach { df =>
+      try if (!Bridge.cacheEntryRddId(df).exists(held)) df.unpersist(blocking = false)
+      catch { case _: Exception => () } // a stopped session's frame: nothing to free
+    })
+    held
+  }
+
+  /** Every DataFrame currently held by any [[DfCache]]. */
   private[graft] def allDfs: Seq[DataFrame] =
     all.values.toSeq.collect { case c: DfCache => c.values }.flatten
 }

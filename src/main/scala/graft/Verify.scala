@@ -16,11 +16,13 @@ object Verify {
     // parses the same raw bytes the contracted Spark reader did
     System.setProperty("graft.raw.dir",
       Paths.get(outDir).toAbsolutePath.toString + "/.raw")
+    // each query's temporaries are released before the next query runs,
+    // so no result depends on what an earlier query left cached
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try MaterializedCaches.scoped(spark)(
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

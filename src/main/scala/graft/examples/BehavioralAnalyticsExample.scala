@@ -30,8 +30,9 @@ object BehavioralAnalyticsExample {
 
     // 1. sessions: full build (persisted — counted here AND written in
     // step 5; without the persist the dominant stage runs twice), then
-    // the incremental fold (same result, touched-users-only work)
-    val sessions = Sessions.sessionize(spark, sfDir).persist()
+    // the incremental fold (same result, touched-users-only work); the
+    // session's stop releases it
+    val sessions = graft.MaterializedCaches.persistOnce(Sessions.sessionize(spark, sfDir))
     val nSessions = sessions.count()
     val incremental = Sessions.sessionizeIncremental(spark, sfDir)
     require(incremental.count() == nSessions,

@@ -558,7 +558,7 @@ case class SortedIntersectExpr(left: Expression, right: Expression)
          |  if ($xv == $yv) { $buf[$n++] = $xv; $i++; $j++; }
          |  else if ($xv < $yv) { $i++; } else { $j++; }
          |}
-         |${ev.value} = org.apache.spark.sql.catalyst.util.UnsafeArrayData
+         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
          |  .fromPrimitiveArray(java.util.Arrays.copyOf($buf, $n));
        """.stripMargin
     })

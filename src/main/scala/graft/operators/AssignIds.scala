@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.MaterializedCaches.persistOnce
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.types.LongType
 
@@ -47,13 +48,12 @@ object AssignIds {
     * materialization, but `persist` is best-effort — blocks lost with an
     * executor are recomputed, and a non-deterministic upstream can then
     * still diverge between the jobs, so a deterministic `df` remains the
-    * caller's obligation. The temporary is released by the bench janitor
-    * / session teardown, the PrefixSum precedent.
+    * caller's obligation. The temporary is released by the enclosing
+    * [[graft.MaterializedCaches.scoped]], the PrefixSum precedent.
     */
   def byOrder(df: DataFrame, order: Seq[Column], idCol: String): DataFrame = {
     val spark = df.sparkSession
-    val sorted = layout(df, order)
-    graft.MaterializedCaches.persistOnce(sorted) // MEMORY_AND_DISK, the default
+    val sorted = persistOnce(layout(df, order)) // MEMORY_AND_DISK, the default
     val schema = sorted.schema.add(idCol, LongType, nullable = false)
     val withId = sorted.rdd.zipWithIndex().map { case (row, i) =>
       Row.fromSeq(row.toSeq :+ (i + 1L))

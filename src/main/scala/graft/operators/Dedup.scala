@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.MaterializedCaches.{persistOnce, persisting}
 import graft.functions.{Djb2, TextFns, VectorFns}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -64,44 +65,6 @@ object Dedup {
     val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     if (!org.apache.spark.sql.graft.Bridge.isConfExplicitlySet(df.sparkSession, key))
       df.sparkSession.conf.set(key, "1000000")
-  }
-
-  /** Persisted intra-operator temporaries (the pivot-pruned path's bucket
-    * aggregate) that must outlive their builder call because the returned
-    * DataFrame is lazy. [[sweepTemporaries]] releases them; the bench's
-    * between-queries storage janitor unpersists them as a side effect of
-    * its RDD sweep (they are not DfCache-protected), so only direct
-    * library consumers need to call the sweep themselves.
-    */
-  private val persistedTemps = new java.util.ArrayDeque[DataFrame]()
-
-  /** FIFO cap on the registry: direct library callers who never invoke
-    * [[sweepTemporaries]] must not accumulate cached bucket aggregates
-    * for the JVM lifetime, so registration past the cap evicts (and
-    * unpersists) the oldest entry. 8 live bucket aggregates comfortably
-    * covers every in-repo composition (the widest, ann_pareto, holds 3
-    * lazy pair frames at once); unpersisting an entry a janitor already
-    * swept is a no-op.
-    */
-  private val MaxTemps = 8
-
-  private def registerTemp(df: DataFrame): Unit = persistedTemps.synchronized {
-    persistedTemps.add(df)
-    while (persistedTemps.size > MaxTemps) {
-      try persistedTemps.poll().unpersist(blocking = false)
-      catch { case _: Exception => () }
-    }
-  }
-
-  /** Unpersist every temporary this module has persisted. Safe to call
-    * any time: a later re-invocation of the operator re-persists what it
-    * needs (at worst the bucket aggregate recomputes once).
-    */
-  def sweepTemporaries(): Unit = persistedTemps.synchronized {
-    while (!persistedTemps.isEmpty) {
-      try persistedTemps.poll().unpersist(blocking = false)
-      catch { case _: Exception => () }
-    }
   }
 
   /** Exact dedup: sha256 of the raw text, keep the smallest doc_id per
@@ -367,18 +330,12 @@ object Dedup {
     // posture): the bucket aggregate feeds both the small-bucket explode
     // and the giant-bucket hub probe; without the persist the whole
     // scan->shingle->sign->band aggregate would run twice. The persist
-    // must outlive this call (the returned DataFrame is lazy), so it is
-    // registered in [[sweepTemporaries]]'s registry: the bench janitor
-    // sweeps it automatically between queries; library consumers calling
-    // minhash/minhashPairs directly should call Dedup.sweepTemporaries()
-    // once the pair result is materialized, or the cached bucket
-    // aggregate lives for the JVM.
-    val buckets = bandKeys(sigs)
+    // must outlive this call (the returned DataFrame is lazy): a query-
+    // local temporary, released by the enclosing MaterializedCaches.scoped.
+    val buckets = persistOnce(bandKeys(sigs)
       .groupBy(col("band"), col("bh"))
       .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .persist()
-    registerTemp(buckets)
+      .filter(size(col("ids")) > 1))
     val small = buckets.filter(size(col("ids")) <= giantBucketThreshold)
       .select(explode(pairsOf(col("ids"), Int.MaxValue)).as("p"))
       .select(col("p.id1"), col("p.id2"))
@@ -474,15 +431,14 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, idCol1: String = "id1",
       idCol2: String = "id2", maxIter: Int = 50): DataFrame = {
-    // persist the pair input BEFORE the symmetric union: the union's two
-    // branches otherwise re-execute the (potentially very expensive) pair
-    // pipeline twice inside the first edges materialization
-    val p0 = pairs.select(col(idCol1).as("src"), col(idCol2).as("dst")).persist()
+    // persist the pair input BEFORE the symmetric union (persisting caches
+    // in argument order): the union's two branches otherwise re-execute
+    // the (potentially very expensive) pair pipeline twice inside the
+    // first edges materialization
+    val p0 = pairs.select(col(idCol1).as("src"), col(idCol2).as("dst"))
     val edges = p0.union(p0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist()
-    edges.count() // materialize edges, then the pair cache can go
-    p0.unpersist()
-    try {
+      .distinct()
+    persisting(p0, edges) {
       // each round MUST truncate lineage (the [[Iterate]] checkpoint), not
       // just cache: the logical plan otherwise doubles per round (labels
       // is referenced twice) and the 2^rounds plan tree OOMs the driver
@@ -506,7 +462,7 @@ object Dedup {
       if (!res.converged) org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(res.frame)
       require(res.converged, s"connectedComponents did not converge in $maxIter rounds")
       res.frame.select(col("id"), col("label"))
-    } finally edges.unpersist()
+    }
   }
 
   /** Connected components by alternating large-star / small-star
@@ -535,7 +491,7 @@ object Dedup {
   def connectedComponentsStar(pairs: DataFrame, idCol1: String = "id1",
       idCol2: String = "id2", maxIter: Int = 60): DataFrame = {
     val p0 = pairs.select(col(idCol1).as("src"), col(idCol2).as("dst"))
-      .filter(col("src") =!= col("dst")).persist()
+      .filter(col("src") =!= col("dst"))
 
     // large-star expects symmetric edges; emits (v, min(N(u)+u)) for v>u
     def largeStar(e: DataFrame): DataFrame = {
@@ -572,11 +528,12 @@ object Dedup {
     // and both sides are distinct sets, so a one-sided empty except is
     // set equality) — a ~2^-64 hash collision would otherwise
     // terminate early with silently wrong clusters.
-    val res = Iterate(Iterate.Round(p0, Row(-1L, 0L)), maxIter, fingerprint,
-        stop = (prev, cur) => cur.metric == prev.metric && cur.frame.except(prev.frame).isEmpty) {
-      (prev, _) => smallStar(largeStar(prev.frame))
+    val res = persisting(p0) {
+      Iterate(Iterate.Round(p0, Row(-1L, 0L)), maxIter, fingerprint,
+          stop = (prev, cur) => cur.metric == prev.metric && cur.frame.except(prev.frame).isEmpty) {
+        (prev, _) => smallStar(largeStar(prev.frame))
+      }
     }
-    p0.unpersist()
     if (!res.converged) {
       // release the final round's checkpoint blocks on the failure path too
       org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(res.frame)
@@ -733,7 +690,7 @@ object Dedup {
       .agg(ceil(count(lit(1)).cast("double") / shardAbove).cast("int").as("ns"))
     // persisted: the shard frame feeds BOTH sides of the self-join and
     // each side would otherwise re-run the scan + argmin assignment
-    // (the image_neardup lesson); swept by the janitor via registerTemp.
+    // (the image_neardup lesson); a query-local temporary.
     val sh = c.join(broadcast(ns), "cell")
       .withColumn("g", pmod(xxhash64(col("vec_id")), col("ns")).cast("int"))
       .select(col("cell"), col("g"),
@@ -742,7 +699,7 @@ object Dedup {
       .select(col("cell"),
         least(col("g"), col("j")).as("g1"), greatest(col("g"), col("j")).as("g2"),
         col("g"), col("vec_id"), col("embedding"))
-    if (graft.MaterializedCaches.persistOnce(sh)) registerTemp(sh)
+    persistOnce(sh)
     val a = sh.select(col("cell"), col("g1"), col("g2"), col("g").as("ga"),
       col("vec_id").as("id1"), col("embedding").as("e1"))
     val b = sh.select(col("cell"), col("g1"), col("g2"), col("g").as("gb"),

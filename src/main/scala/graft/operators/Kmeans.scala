@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.MaterializedCaches.persisting
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -83,8 +84,7 @@ object Kmeans {
     // update); also guarantees init and iterations see ONE evaluation.
     // A frame the caller cached stays the caller's to release: unpersisting
     // it here would drop it under a concurrent trainer on the same plan
-    val owned = graft.MaterializedCaches.persistOnce(q)
-    try {
+    persisting(q) {
       var cents = q.orderBy(col("vec_id")).limit(k).collect()
         .map(_.getSeq[Long](1).toArray)
       require(cents.length == k, s"corpus smaller than k=$k")
@@ -105,6 +105,6 @@ object Kmeans {
         cents = next
       }
       cents
-    } finally if (owned) q.unpersist()
+    }
   }
 }

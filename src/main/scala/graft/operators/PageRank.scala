@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.MaterializedCaches.persisting
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -82,17 +83,24 @@ object PageRank {
       prebuilt: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     require(iters >= 1, "need at least one iteration")
     require(scale >= 1000000L, "scale below 1e6 leaves too little rank resolution")
-    val ownsArtifacts = prebuilt.isEmpty
-    val deg = prebuilt.map(_._1).getOrElse(
-      edges.groupBy(col("src")).agg(count(lit(1)).as("d")).persist())
-    // degree pre-joined once and the result partitioned by dst: with the
-    // rank side broadcast, every round is then scan + project + aggregate
-    // with NO exchange (broadcast joins preserve the cached partitioning,
-    // which already satisfies the aggregate's required distribution)
-    val e2 = prebuilt.map(_._2).getOrElse(
-      edges.join(deg, "src")
-        .select(col("src"), col("dst"), col("d"))
-        .repartition(col("dst")).persist())
+    prebuilt.fold {
+      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+      // degree pre-joined once and the result partitioned by dst: with
+      // the rank side broadcast, every round is then scan + project +
+      // aggregate with NO exchange (broadcast joins preserve the cached
+      // partitioning, which already satisfies the aggregate's required
+      // distribution)
+      val e2 = edges.join(deg, "src").select(col("src"), col("dst"), col("d"))
+        .repartition(col("dst"))
+      persisting(deg, e2)(iterate(deg, e2, iters, validate, scale, seed))
+    } { case (deg, e2) => iterate(deg, e2, iters, validate, scale, seed) }
+  }
+
+  /** [[run]]'s rounds over the degree table and the degree-pre-joined
+    * edge table.
+    */
+  private def iterate(deg: DataFrame, e2: DataFrame, iters: Int,
+      validate: Boolean, scale: Long, seed: Option[Long]): DataFrame = {
     val nNodes = deg.count()
     // overflow safety WITHOUT a hard abort: the worst case (a star graph
     // concentrating the whole mass on one node) needs 85*N*scale < 2^63.
@@ -137,15 +145,13 @@ object PageRank {
         .select(col("dst").as("node"), (jumpCol + expr("(85 * c) div 100")).as("r"))
     }
     // the final block always checkpoints: the returned frame must not
-    // depend on e2/deg, which the finally below unpersists before the
-    // caller ever executes the (lazy) result. Each eager checkpoint runs
-    // its block's linear plan as ONE AQE query.
+    // depend on e2/deg, which [[run]] releases before the caller ever
+    // executes the (lazy) result. Each eager checkpoint runs its block's
+    // linear plan as ONE AQE query.
     val blocks = (iters + RoundsPerCheckpoint - 1) / RoundsPerCheckpoint
-    try {
-      Iterate(Iterate.Round(r0, Row.empty), blocks) { (prev, b) =>
-        val n = math.min(RoundsPerCheckpoint, iters - (b - 1) * RoundsPerCheckpoint)
-        (1 to n).foldLeft(prev.frame)((r, _) => round(r))
-      }.frame
-    } finally if (ownsArtifacts) { e2.unpersist(); deg.unpersist() }
+    Iterate(Iterate.Round(r0, Row.empty), blocks) { (prev, b) =>
+      val n = math.min(RoundsPerCheckpoint, iters - (b - 1) * RoundsPerCheckpoint)
+      (1 to n).foldLeft(prev.frame)((r, _) => round(r))
+    }.frame
   }
 }

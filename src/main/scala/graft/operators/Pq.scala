@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.MaterializedCaches.persisting
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -75,15 +76,13 @@ object Pq {
     * once and sliced M ways.
     */
   def train(emb: DataFrame, coarse: Coarse): Array[Array[Array[Long]]] = {
-    val r = residuals(emb, coarse).persist()
-    try
-      Array.tabulate(M) { m =>
-        Kmeans.trainQ(
-          r.select(col("vec_id"),
-            slice(col("v"), m * SubDim + 1, SubDim).as("v")),
-          k = K, iters = Iters)
-      }
-    finally r.unpersist()
+    val r = residuals(emb, coarse)
+    persisting(r)(Array.tabulate(M) { m =>
+      Kmeans.trainQ(
+        r.select(col("vec_id"),
+          slice(col("v"), m * SubDim + 1, SubDim).as("v")),
+        k = K, iters = Iters)
+    })
   }
 
   /** The nearest-codebook-centroid code for subspace `m` of the residual

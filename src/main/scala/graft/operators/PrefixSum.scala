@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.MaterializedCaches.persistOnce
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,12 +51,11 @@ object PrefixSum {
     // silently mis-join (the same defeat mode the tf_idf plan comment
     // documents). With the cache, both consumers read ONE InMemoryRelation
     // (one RDD, one set of partition ids) no matter how pruning rewrites
-    // the reads. The temporary is released by the bench janitor / session
-    // teardown; callers in long-lived sessions may unpersist via the plan.
-    // A caller that rebuilds the same plan reads the same entry.
-    val laid = df.repartitionByRange(order: _*)
-      .withColumn(pid, spark_partition_id())
-    graft.MaterializedCaches.persistOnce(laid)
+    // the reads. The temporary is released by the enclosing
+    // MaterializedCaches.scoped; a caller that rebuilds the same plan
+    // reads the same entry.
+    val laid = persistOnce(df.repartitionByRange(order: _*)
+      .withColumn(pid, spark_partition_id()))
     val sums = laid.groupBy(col(pid)).agg(sum(value).cast("long").as("_ps_sum"))
     // exclusive offsets: collapse the ≤P-row sums table (P = shuffle
     // partition count, constant-bounded like the scalar count exchange)

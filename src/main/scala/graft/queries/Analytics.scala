@@ -317,8 +317,7 @@ object Analytics {
     * equality for AQE exchange reuse instead, but that coupling is
     * fragile under pruning and was the round-7 profile's suspect (the
     * same lesson as PrefixSum: when two branches MUST see one
-    * evaluation, say so with storage, not plan-shape hope). The
-    * temporary is swept by the bench janitor. idf joins back as an
+    * evaluation, say so with storage, not plan-shape hope). idf joins back as an
     * EXPLICIT broadcast: dfreq is vocabulary-sized (sublinear in the
     * corpus — partial aggregation collapses it map-side) while tf is
     * data-sized; left to its size estimates at sf0.01 AQE broadcast the
@@ -328,8 +327,7 @@ object Analytics {
     val docs = Tables.documents(s, d)
     val occ = docs.select(col("doc_id"),
       explode(filter(TextFns.tokens(col("text")), t => length(t) > 0)).as("tok"))
-    val tf = occ.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-      .persist()
+    val tf = graft.MaterializedCaches.persistOnce(occ.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val scored = tf.join(broadcast(dfreq), "tok").crossJoin(broadcast(n))
@@ -372,7 +370,6 @@ object Analytics {
         .select(col("user_id"), col("event_id"), col("ts_ms"), col("event_type"),
           lag(col("event_id"), 1).over(w).as("prev_id"),
           lag(col("ts_ms"), 1).over(w).as("prev_ts"))
-        .persist()
     })
     ev.createOrReplaceTempView("graft_ev_chain")
     s.sql(
@@ -1033,7 +1030,6 @@ object Analytics {
         .selectExpr("cents", "CAST((rn - 1) * 10 div N AS INT) AS decile")
         .groupBy(col("decile"))
         .agg(count(lit(1)).as("n_customers"), sum(col("cents")).as("cents"))
-        .persist()
     })
     val cum = bucketed.select(col("decile").as("dk"))
       .join(broadcast(bucketed), col("decile") <= col("dk"))

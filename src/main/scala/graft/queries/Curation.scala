@@ -748,18 +748,17 @@ object Curation {
     * partitioning-invariant and DuckDB-identical.
     */
   def dsirWeights(s: SparkSession, d: String): DataFrame = {
-    val tf = docs(s, d)
+    // r18 persisted: the feature cube feeds the model aggregate AND
+    // the scoring probe — without storage the corpus token explode +
+    // hash ran once per consumer (three evaluations)
+    val tf = graft.MaterializedCaches.persistOnce(docs(s, d)
       .select(col("doc_id"), col("lang"),
         explode(Dedup.tokensNE(col("text"))).as("t"))
       .select(col("doc_id"), col("lang"),
         (graft.functions.TextFns.tokenHash31(col("t")) % 64).cast("int")
           .as("bucket"))
       .groupBy(col("doc_id"), col("lang"), col("bucket"))
-      .agg(count(lit(1)).as("tf"))
-      // r18 persisted: the feature cube feeds the model aggregate AND
-      // the scoring probe — without storage the corpus token explode +
-      // hash ran once per consumer (three evaluations)
-      .persist()
+      .agg(count(lit(1)).as("tf")))
     // r18: raw and target counts fold in ONE pass over the cube (a
     // conditional sum replaces the second aggregate + left join; a
     // bucket with no target rows sums the empty branch to 0, exactly

@@ -38,7 +38,6 @@ object Graph {
       // src >= offset), so plain unionAll introduces no duplicate edges
       li.select(col("sk").as("src"), (col("pk") + PartOffset).as("dst"))
         .union(li.select((col("pk") + PartOffset).as("src"), col("sk").as("dst")))
-        .persist()
     })
 
   private val degreeCache = new graft.DfCache("graph.degrees")
@@ -52,7 +51,7 @@ object Graph {
     */
   def degreeTable(s: SparkSession, d: String): DataFrame =
     degreeCache.getOrElseUpdate((s, d),
-      edgeTable(s, d).groupBy(col("src")).agg(count(lit(1)).as("dg")).persist())
+      edgeTable(s, d).groupBy(col("src")).agg(count(lit(1)).as("dg")))
 
   private val prEdgeCache = new graft.DfCache("graph.prEdges")
 
@@ -67,7 +66,7 @@ object Graph {
     (deg, prEdgeCache.getOrElseUpdate((s, d),
       edgeTable(s, d).join(deg, "src")
         .select(col("src"), col("dst"), col("d"))
-        .repartition(col("dst")).persist()))
+        .repartition(col("dst"))))
   }
 
   private val hubSeeds = new graft.SessionCache[(Long, Long)]("graph.hubSeeds")
@@ -244,7 +243,6 @@ object Graph {
           explode(graft.operators.Dedup.pairsOf(col("sks"), Int.MaxValue)).as("p"))
         .groupBy(col("p.id1").as("u"), col("p.id2").as("v"))
         .agg(count(lit(1)).as("common"), sum(col("w_nano")).as("aa_nano"))
-        .persist()
     })
 
   def cosupplyNeighbors(s: SparkSession, d: String): DataFrame = {
@@ -324,7 +322,7 @@ object Graph {
       graft.operators.PageRank.BroadcastNodeLimit
     def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // r18: the edge stream is laid out ONCE per aggregation key and
-    // persisted (query-local, janitor-swept): a-rounds aggregate by pk,
+    // checkpointed (query-local): a-rounds aggregate by pk,
     // h-rounds by sk, and under the gate the score probe is a broadcast
     // join (which preserves the cached layout), so each half-round
     // collapses to scan + BHJ + partition-local aggregate — one stage —
@@ -420,7 +418,6 @@ object Graph {
         .select(explode(graft.operators.Dedup.pairsOf(col("pks"), Int.MaxValue)).as("p"))
         .select(col("p.id1").as("u"), col("p.id2").as("v"))
         .distinct()
-        .persist()
     })
 
   /** Node degrees of the co-purchase graph — persisted artifact shared
@@ -433,7 +430,6 @@ object Graph {
       val e = copurchaseEdges(s, d)
       e.select(col("u").as("n")).union(e.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-        .persist()
     })
 
   /** Sorted out-adjacency of the degree-oriented edge list — the probe
@@ -449,7 +445,6 @@ object Graph {
       orientedEdges(s, d)
         .select(col("a.id").as("x"), col("b.id").as("y"))
         .groupBy(col("x")).agg(sort_array(collect_list(col("y"))).as("ys"))
-        .persist()
     })
 
   /** Degree-oriented edge list of the co-purchase graph: each edge
@@ -473,7 +468,6 @@ object Graph {
             .otherwise(struct(col("dv").as("deg"), col("v").as("id"))).as("a"),
           when(uFirst, struct(col("dv").as("deg"), col("v").as("id")))
             .otherwise(struct(col("du").as("deg"), col("u").as("id"))).as("b"))
-        .persist()
     })
 
   /** Global triangle census of the part co-purchase graph — node/edge/
@@ -758,7 +752,7 @@ object Graph {
   def communitiesLpa(s: SparkSession, d: String): DataFrame = {
     val e = copurchaseEdges(s, d)
     // r18: the symmetrized edge list is laid out by src ONCE and
-    // persisted (query-local, janitor-swept). Every round's vote
+    // checkpointed (query-local). Every round's vote
     // aggregate groups on (src, lab) and the argmax clusters on src —
     // both satisfied by hash(src) (partitioning on a subset of the
     // grouping keys is a valid clustering) — and under the broadcast
@@ -780,7 +774,7 @@ object Graph {
     // layout removes (measured in the first r18 cut); the Bridge helper
     // re-declares hashpartitioning(src, N) on the checkpointed blocks —
     // exactly the REPARTITION_BY_NUM layout just paid for. Blocks are
-    // released by the bench janitor / session teardown.
+    // released by the enclosing MaterializedCaches.scoped.
     val nPart = s.sessionState.conf.numShufflePartitions
     val sym = org.apache.spark.sql.graft.Bridge.localCheckpointHashPartitioned(
       e.select(col("u").as("src"), col("v").as("dst"))

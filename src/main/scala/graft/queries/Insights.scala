@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.MaterializedCaches.persistOnce
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -47,9 +48,8 @@ object Insights {
     // (pair explode, item supports, basket total) and is itself a
     // shuffle — recomputing it per reference would triple the query's
     // base cost
-    val lp = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      .persist()
+    val lp = persistOnce(Tables.lineitem(s, d)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct())
     val pairs = lp.groupBy(col("ok"))
       .agg(sort_array(collect_list(col("pk"))).as("pks"))
       .filter(size(col("pks")) > 1 && size(col("pks")) <= BasketCap)
@@ -65,7 +65,7 @@ object Insights {
     // ran both support probes over it; now the pair stream ends at a
     // TakeOrdered(100) and the item table (persisted — it used to be
     // aggregated once per join side) joins 100 rows.
-    val item = lp.groupBy(col("pk")).agg(count(lit(1)).as("n_item")).persist()
+    val item = persistOnce(lp.groupBy(col("pk")).agg(count(lit(1)).as("n_item")))
     val n = broadcast(lp.agg(countDistinct(col("ok")).as("N")))
     pairs
       .orderBy(col("n_uv").desc, col("u"), col("v"))
@@ -272,9 +272,8 @@ object Insights {
       .agg(countDistinct(col("user_id")).as("n_active"))
     val newPerDay = ev.groupBy(col("user_id")).agg(min(col("day")).as("day"))
       .groupBy(col("day")).agg(count(lit(1)).as("n_new"))
-    val base = dau.join(newPerDay, Seq("day"), "left")
-      .select(col("day"), col("n_active"), coalesce(col("n_new"), lit(0L)).as("n_new"))
-      .persist()
+    val base = persistOnce(dau.join(newPerDay, Seq("day"), "left")
+      .select(col("day"), col("n_active"), coalesce(col("n_new"), lit(0L)).as("n_new")))
     val cum = base.select(col("day").as("dk"))
       .join(broadcast(base.select(col("day"), col("n_new"))), col("day") <= col("dk"))
       .groupBy(col("dk")).agg(sum(col("n_new")).as("cum_users"))
@@ -314,9 +313,8 @@ object Insights {
     * event seven times through a sort.
     */
   def rollingActiveUsers(s: SparkSession, d: String): DataFrame = {
-    val ud = graft.streaming.Sessions.events(s, d)
-      .select(col("user_id"), expr("ts_ms div 86400000").as("day")).distinct()
-      .persist()
+    val ud = persistOnce(graft.streaming.Sessions.events(s, d)
+      .select(col("user_id"), expr("ts_ms div 86400000").as("day")).distinct())
     val wau = ud
       .select(col("user_id"), explode(sequence(col("day"), col("day") + 6)).as("wday"))
       .groupBy(col("wday")).agg(countDistinct(col("user_id")).as("wau_7d"))
@@ -379,7 +377,6 @@ object Insights {
         .groupBy(expr("unix_millis(CAST(o_orderdate AS TIMESTAMP)) div 86400000")
           .as("day"))
         .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-        .persist()
     })
 
   /** Centered 7-day moving-average trend + residual of daily revenue —
@@ -782,10 +779,9 @@ object Insights {
       .join(broadcast(daily), abs(col("day") - col("dk")) <= 3)
       .groupBy(col("dk"))
       .agg(expr("sum(cents) div count(1)").as("trend_cents"))
-    val res = daily.join(broadcast(tr), col("day") === col("dk"))
+    val res = persistOnce(daily.join(broadcast(tr), col("day") === col("dk"))
       .select(col("day"), col("cents"), col("trend_cents"),
-        (col("cents") - col("trend_cents")).as("residual_cents"))
-      .persist()
+        (col("cents") - col("trend_cents")).as("residual_cents")))
     // medianOf runs two driver actions (the rank build + count) per call,
     // so anomaly_days launches 4 small jobs beyond the final one. That is
     // BOUNDED BY DESIGN: the input is the daily-revenue rollup — one row

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.MaterializedCaches.persisting
 import graft.functions.{TextFns, VectorFns}
 import graft.operators.{Dedup, Kmeans, Multimodal, Pq}
 import graft.sources.Tables
@@ -197,7 +198,6 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
       flat.groupBy(col("label"))
         .agg(array_sort(collect_list(struct(col("dim"), col("c")))).as("dc"))
         .select(col("label"), transform(col("dc"), e => e.getField("c")).as("centroid"))
-        .persist()
     })
 
   /** IVF-style top-k: the scale path for similarity search. Rank coarse
@@ -1193,8 +1193,8 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     // the sum. Results are order-pinned by the ladder Seq. Both chains
     // train on one frame persisted here, so neither releases it under
     // the other.
-    val q = Kmeans.quantized(emb).persist()
-    val rows = try parTrains(Seq(8, Kmeans.ncellsFor(n))) { k =>
+    val q = Kmeans.quantized(emb)
+    val rows = persisting(q)(parTrains(Seq(8, Kmeans.ncellsFor(n))) { k =>
       val model = Kmeans.trainQ(q, k = k, iters = 2)
       val nprobe = math.max(1, 3 * k / 8)
       val probed = model.zipWithIndex.map { case (c, cid) =>
@@ -1216,7 +1216,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
         .select(lit(k).cast("int").as("ncells"),
           lit(nprobe).cast("int").as("nprobe"), col("n_hit"),
           expr("10000 * n_hit div 20").as("recall_bp"))
-    } finally q.unpersist()
+    })
     rows.reduce(_ union _).orderBy(col("ncells"))
   }
 
@@ -1364,8 +1364,8 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
   def pcaPower(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val dims = 64
-    val q = Kmeans.quantized(Tables.embeddings(s, d)).persist()
-    try {
+    val q = Kmeans.quantized(Tables.embeddings(s, d))
+    persisting(q) {
       val mu = new Array[Long](dims)
       q.select(posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy(col("dim")).agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
@@ -1395,7 +1395,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
       }
       v.zipWithIndex.map { case (x, j) => (j, x) }.toSeq
         .toDF("dim", "loading_milli").orderBy(col("dim"))
-    } finally { q.unpersist(); () }
+    }
   }
 
   /** Greedy k-center coreset (Gonzalez 1985 farthest-point traversal —
@@ -1417,8 +1417,8 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     */
   def kcenterCoreset(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val q = Kmeans.quantized(Tables.embeddings(s, d)).persist()
-    try {
+    val q = Kmeans.quantized(Tables.embeddings(s, d))
+    persisting(q) {
       val seed = q.orderBy(col("vec_id")).limit(1).collect()(0)
       var picked =
         Vector((seed.getLong(0), seed.getSeq[Long](1).toArray, 0L))
@@ -1435,7 +1435,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
       picked.zipWithIndex.map { case ((id, _, r), t) => (t, id, r) }
         .toSeq.toDF("round", "vec_id", "radius_micro2")
         .orderBy(col("round"))
-    } finally { q.unpersist(); () }
+    }
   }
 
   /** k-NN label-consistency audit (the Confident-Learning-style

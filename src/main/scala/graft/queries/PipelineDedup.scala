@@ -69,7 +69,7 @@ private[queries] trait PipelineDedup extends PipelineBase { this: Pipeline.type 
 
   private[queries] def minhashPairTable(s: SparkSession, d: String): DataFrame =
     pairCache.getOrElseUpdate((s, d),
-      Dedup.minhashPairsFrom(shingleHashTable(s, d)).persist())
+      Dedup.minhashPairsFrom(shingleHashTable(s, d)))
 
   /** The materialized shingle-hash set table — the corpus dedup artifact
     * (sessionize/centroids precedent): in a production run it is written
@@ -83,7 +83,7 @@ private[queries] trait PipelineDedup extends PipelineBase { this: Pipeline.type 
 
   private[queries] def shingleHashTable(s: SparkSession, d: String): DataFrame =
     hsetCache.getOrElseUpdate((s, d),
-      Dedup.shingleHashSets(docs(s, d)).persist())
+      Dedup.shingleHashSets(docs(s, d)))
 
   /** MinHash/LSH near-dup pairs, Jaccard-verified. Deliberately NOT the
     * cached pair table: this query IS the pair-production pipeline
@@ -113,7 +113,7 @@ private[queries] trait PipelineDedup extends PipelineBase { this: Pipeline.type 
   private[queries] val ngramPairCache = new graft.DfCache("pipeline.ngramPairs")
 
   private[queries] def ngramJaccardPairs(s: SparkSession, d: String): DataFrame =
-    ngramPairCache.getOrElseUpdate((s, d), ngramJaccardPairsUncached(s, d).persist())
+    ngramPairCache.getOrElseUpdate((s, d), ngramJaccardPairsUncached(s, d))
 
   /** Bounded-id shingle-hash pair scaffold shared by the exact-similarity
     * twins (Jaccard here, containment in Curation): (id1 < id2) pairs
@@ -608,7 +608,7 @@ private[queries] trait PipelineDedup extends PipelineBase { this: Pipeline.type 
 
   private[queries] def ccLabels(s: SparkSession, d: String): DataFrame =
     ccLabelCache.getOrElseUpdate((s, d),
-      Dedup.connectedComponents(ngramJaccardPairs(s, d)).persist())
+      Dedup.connectedComponents(ngramJaccardPairs(s, d)))
 
   /** Per-source near-duplicate rate — the curation report that names the
     * spammy sources (a crawl source whose documents mostly collapse into
@@ -787,15 +787,15 @@ private[queries] trait PipelineDedup extends PipelineBase { this: Pipeline.type 
     graft.MaterializedCaches.persistOnce(t)
     val tot = broadcast(t.agg(sum(size(col("ts"))).as("total_slots")))
     val rungs = Seq(8, 16, 32).map { w =>
-      val sp = t.filter(size(col("ts")) >= w)
+      // persisted: feeds the fingerprint census AND the coverage probe
+      val sp = graft.MaterializedCaches.persistOnce(t.filter(size(col("ts")) >= w)
         .select(col("doc_id"), explode(transform(
           sequence(lit(1), size(col("ts")) - lit(w - 1)),
           i => struct(i.as("i"),
             conv(substring(sha2(
               concat_ws(" ", slice(col("ts"), i, lit(w))), 256), 1, 15), 16, 10)
               .cast("long").as("h")))).as("sp"))
-        .select(col("doc_id"), col("sp.i").as("i"), col("sp.h").as("h"))
-        .persist() // feeds the fingerprint census AND the coverage probe
+        .select(col("doc_id"), col("sp.i").as("i"), col("sp.h").as("h")))
       val dup = sp.groupBy(col("h"))
         .agg(size(collect_set(col("doc_id"))).as("nd"))
         .filter(col("nd") >= 2).select(col("h"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.MaterializedCaches.persistOnce
 import graft.functions.{TextFns, VectorFns}
 import graft.operators.{Dedup, Kmeans, Multimodal, Pq}
 import graft.sources.Tables
@@ -271,22 +272,21 @@ private[queries] trait PipelineMedia extends PipelineBase { this: Pipeline.type 
     * (session, dir) — the ngramPairCache posture: the declared query
     * adds only the presentation sort, and [[modalityNeardupSummary]]
     * aggregates the same bounded frame instead of re-running the
-    * decode + band join per read. DfCache-protected from the bench
-    * janitor; bounded by the doc_id < 500 audit domain.
+    * decode + band join per read; bounded by the doc_id < 500 audit
+    * domain.
     */
   private[queries] val imagePairCache = new graft.DfCache("media.imageNearDupPairs")
 
   private[queries] def imageNearDupPairs(s: SparkSession, d: String): DataFrame =
-    imagePairCache.getOrElseUpdate((s, d), imageNearDupPairsUncached(s, d).persist())
+    imagePairCache.getOrElseUpdate((s, d), imageNearDupPairsUncached(s, d))
 
   private def imageNearDupPairsUncached(s: SparkSession, d: String): DataFrame = {
     // persist: the band self-join references this frame on BOTH sides,
     // and without storage each side re-runs the payload decode (the
     // tf_idf lesson — when two branches must see one evaluation, say so
-    // with storage). Swept by the bench janitor like every query-local
-    // temporary.
-    val h = Multimodal.imageHashes(s, docs(s, d).filter(col("doc_id") < 500))
-      .toDF().select(col("doc_id"), col("hash_lo"), col("hash_hi")).persist()
+    // with storage).
+    val h = persistOnce(Multimodal.imageHashes(s, docs(s, d).filter(col("doc_id") < 500))
+      .toDF().select(col("doc_id"), col("hash_lo"), col("hash_hi")))
     val bands = h.select(col("doc_id"), col("hash_lo"), col("hash_hi"),
       posexplode(array(
         col("hash_lo").bitwiseAND(lit(65535L)),
@@ -422,15 +422,15 @@ private[queries] trait PipelineMedia extends PipelineBase { this: Pipeline.type 
   private[queries] val videoPairCache = new graft.DfCache("media.videoNearDupPairs")
 
   private[queries] def videoNearDupPairs(s: SparkSession, d: String): DataFrame =
-    videoPairCache.getOrElseUpdate((s, d), videoNearDupPairsUncached(s, d).persist())
+    videoPairCache.getOrElseUpdate((s, d), videoNearDupPairsUncached(s, d))
 
   private def videoNearDupPairsUncached(s: SparkSession, d: String): DataFrame = {
     // persisted for the same reason as image_neardup: the band self-join
     // reads this frame on both sides and each side would otherwise
     // re-run the GIF decode of every payload.
-    val h = Multimodal.videoHashes(s, docs(s, d).filter(col("doc_id") < 500))
+    val h = persistOnce(Multimodal.videoHashes(s, docs(s, d).filter(col("doc_id") < 500))
       .toDF().select(col("doc_id"), col("n_frames"), col("hash_lo"),
-        col("hash_hi"), col("contour_fp")).persist()
+        col("hash_hi"), col("contour_fp")))
     val bands = h.select(col("doc_id"), col("n_frames"), col("hash_lo"),
       col("hash_hi"), col("contour_fp"),
       posexplode(array(
@@ -476,11 +476,11 @@ private[queries] trait PipelineMedia extends PipelineBase { this: Pipeline.type 
   private[queries] val audioPairCache = new graft.DfCache("media.audioNearDupPairs")
 
   private[queries] def audioNearDupPairs(s: SparkSession, d: String): DataFrame =
-    audioPairCache.getOrElseUpdate((s, d), audioNearDupPairsUncached(s, d).persist())
+    audioPairCache.getOrElseUpdate((s, d), audioNearDupPairsUncached(s, d))
 
   private def audioNearDupPairsUncached(s: SparkSession, d: String): DataFrame = {
-    val h = audioFingerprintOfDocs(s, docs(s, d).filter(col("doc_id") < 500))
-      .persist() // both band-join sides; avoids a second WAV decode pass
+    // persisted: both band-join sides read it; avoids a second WAV decode pass
+    val h = persistOnce(audioFingerprintOfDocs(s, docs(s, d).filter(col("doc_id") < 500)))
     val bands = h.select(col("doc_id"), col("n_frames"), col("fp"),
       posexplode(array(
         col("fp").bitwiseAND(lit(15L)),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.MaterializedCaches
+import graft.MaterializedCaches.{persistOnce, persisting}
 import graft.operators.Dedup
 import graft.streaming.Sessions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -144,13 +144,12 @@ object Quality {
     // corpus token explode + its shuffle twice, once per consumer
     // (guide §2.3/§2.4). The label frame stays persisted too: it feeds
     // the feature join, the class counts AND the score pass. All
-    // training temporaries are swept below / by the bench janitor.
+    // training temporaries are released before the model returns.
     val g = tokenCounts(docs(s, d))
-    val ownsG = MaterializedCaches.persistOnce(g)
     val labels = flagsOfCounts(g).select(col("doc_id"),
-      when(col("kept"), 1L).otherwise(-1L).as("y")).persist()
-    val fl = qmFeaturesOfCounts(g).join(labels, "doc_id").persist()
-    try {
+      when(col("kept"), 1L).otherwise(-1L).as("y"))
+    val fl = qmFeaturesOfCounts(g).join(labels, "doc_id")
+    persisting(g, labels, fl) {
       // r18: class centroids and class counts ride ONE collect (they
       // were two driver jobs for two bounded aggregates over already-
       // persisted frames — the job floor, not the data, was the cost);
@@ -171,8 +170,8 @@ object Quality {
         if (nPos == 0L || nNeg == 0L) 0L
         else cents.getOrElse((1L, b), 0L) / nPos - cents.getOrElse((-1L, b), 0L) / nNeg
       }
-      val sc = qmScoresOf(labels, fl.drop("y"), w).persist()
-      try {
+      val sc = qmScoresOf(labels, fl.drop("y"), w)
+      persisting(sc) {
         // r18: the 257-rung grid is derived IN-PLAN from a broadcast
         // 1-row min/max aggregate of the persisted score frame — the
         // same theta lattice (smin − 1 + id·span div 256, span =
@@ -190,8 +189,8 @@ object Quality {
           .orderBy(col("err"), col("theta")).limit(1)
           .collect()(0) // one row: the trained threshold
         (w, best.getLong(0))
-      } finally sc.unpersist()
-    } finally { fl.unpersist(); labels.unpersist(); if (ownsG) g.unpersist() }
+      }
+    }
   }
 
   /** Score frame (doc_id, y, s) for a weight vector: one map pass —
@@ -262,13 +261,11 @@ object Quality {
     // oracle joins, so the domains agree by construction; labels and
     // scores fold ONE shared tokenCounts build (r18 — previously two
     // full token explodes)
-    val g = tokenCounts(docs(s, d))
-    MaterializedCaches.persistOnce(g)
-    val sc = flagsOfCounts(g)
+    val g = persistOnce(tokenCounts(docs(s, d)))
+    val sc = persistOnce(flagsOfCounts(g)
       .select(col("doc_id"), when(col("kept"), 1L).otherwise(-1L).as("y"))
       .join(qmScoreCounts(g, w, theta0)
-        .select(col("doc_id"), col("score").as("s")), "doc_id")
-      .persist()
+        .select(col("doc_id"), col("score").as("s")), "doc_id"))
     // r18: the grid derives IN-PLAN from a broadcast 1-row min/max of
     // the persisted score frame (the qmTrainModel pattern) — same theta
     // lattice, one driver job fewer
@@ -350,8 +347,7 @@ object Quality {
     */
   private def qmScoredFrame(s: SparkSession, d: String,
       w: Array[Long]): DataFrame = {
-    val g = tokenCounts(docs(s, d))
-    MaterializedCaches.persistOnce(g)
+    val g = persistOnce(tokenCounts(docs(s, d)))
     val labels = flagsOfCounts(g).select(col("doc_id"),
       when(col("kept"), 1L).otherwise(-1L).as("y"))
     qmScoresOf(labels, qmFeaturesOfCounts(g), w)
@@ -413,7 +409,7 @@ object Quality {
     // (zipWithIndex count + main pass) and the N scalar is a third
     // consumer — without storage the whole label+feature+score chain
     // ran three times (the perplexity_filter lesson).
-    val sc = qmScoredFrame(s, d, w).persist()
+    val sc = persistOnce(qmScoredFrame(s, d, w))
     val ranked = graft.operators.AssignIds.byOrder(
       sc, Seq(col("s").desc, col("doc_id")), "rn")
     val n = broadcast(sc.groupBy().agg(count(lit(1)).as("N")))
@@ -690,11 +686,10 @@ object Quality {
     val t = docs(s, d).select(col("doc_id"), Dedup.tokensNE(col("text")).as("ts"))
       .select(col("doc_id"), col("ts"), size(col("ts")).as("l"))
       .filter(col("l") >= 2)
-    val b = t.select(col("doc_id"), explode(zip_with(
+    val b = persistOnce(t.select(col("doc_id"), explode(zip_with(
         slice(col("ts"), lit(1), col("l") - 1), slice(col("ts"), lit(2), col("l") - 1),
         (a, bb) => struct(a.as("w1"), bb.as("w2")))).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .persist()
+      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2")))
     val c12 = b.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
     val c1 = b.groupBy(col("w1")).agg(count(lit(1)).as("c1"))
     val lp = c12.join(c1, "w1")
@@ -746,7 +741,7 @@ object Quality {
   private val pplCache = new graft.DfCache("quality.pplScores")
 
   private def perplexityScored(s: SparkSession, d: String): DataFrame =
-    pplCache.getOrElseUpdate((s, d), perplexityScoredUncached(s, d).persist())
+    pplCache.getOrElseUpdate((s, d), perplexityScoredUncached(s, d))
 
   private def perplexityScoredUncached(s: SparkSession, d: String): DataFrame = {
     val t = docs(s, d).select(col("doc_id"), Dedup.tokensNE(col("text")).as("ts"))
@@ -762,7 +757,7 @@ object Quality {
           ab.getField("w2").as("w2"), c.as("w3")))).as("tg"))
       .select(col("doc_id"), col("tg.w1").as("w1"),
         col("tg.w2").as("w2"), col("tg.w3").as("w3"))
-    MaterializedCaches.persistOnce(tri) // feeds the c123 aggregate + the probe (the setsim lesson)
+    persistOnce(tri) // feeds the c123 aggregate + the probe (the setsim lesson)
     // Every LM marginal is a re-aggregation of c123 itself (c12 = Σ_w3,
     // c23 = Σ_w1, c2 = Σ_{w1,w3}, c3 = Σ_{w1,w2}, n = Σ all) — counts
     // identical by definition, so the slot stream is shuffled ONCE for
@@ -800,7 +795,7 @@ object Quality {
       .agg(count(lit(1)).as("n_slots"), (-sum(col("lp_micro"))).as("surprisal_micro"))
       .selectExpr("doc_id", "n_slots",
         "surprisal_micro div n_slots AS ppl_micro")
-    MaterializedCaches.persistOnce(sc)
+    persistOnce(sc)
     val ranked = graft.operators.AssignIds.byOrder(
       sc, Seq(col("ppl_micro"), col("doc_id")), "rn")
     val nd = broadcast(sc.groupBy().agg(count(lit(1)).as("nd")))
@@ -1488,15 +1483,13 @@ object Quality {
     // shuffle), the profile counts re-aggregate that cube (Σ over
     // doc_id — counts identical by definition), and the probe joins
     // distinct doc-trigram rows, with occurrence counts recovered as
-    // Σ c. The persisted base is a query-local temporary (swept by the
-    // bench janitor).
-    val tris = docs(s, d)
+    // Σ c. The persisted base is a query-local temporary.
+    val tris = persistOnce(docs(s, d)
       .select(col("doc_id"), col("lang"), explode(Dedup.tokensNE(col("text"))).as("w"))
       .filter(length(col("w")) >= 3)
       .select(col("doc_id"), col("lang"), explode(expr(
         "transform(sequence(1, length(w) - 2), i -> substring(w, i, 3))")).as("tri"))
-      .groupBy(col("doc_id"), col("lang"), col("tri")).agg(count(lit(1)).as("c"))
-      .persist()
+      .groupBy(col("doc_id"), col("lang"), col("tri")).agg(count(lit(1)).as("c")))
     // same (lang, tri) counts and the same (c desc, tri asc) top-5 as
     // [[ngramProfile]] — the classifier's model cannot drift from the
     // published profile because both are the identical aggregate
@@ -1613,12 +1606,11 @@ object Quality {
       .filter(size(col("ts")) >= 5)
     // persisted: g feeds both the ≥3-docs census and the per-source
     // probe — two full explodes otherwise (the boilerplateScrub note)
-    val g = t.select(col("doc_id"), col("source"),
+    val g = persistOnce(t.select(col("doc_id"), col("source"),
       explode(transform(sequence(lit(1), size(col("ts")) - 4),
         i => concat_ws(" ", element_at(col("ts"), i),
           element_at(col("ts"), i + 1), element_at(col("ts"), i + 2),
-          element_at(col("ts"), i + 3), element_at(col("ts"), i + 4)))).as("g"))
-      .persist()
+          element_at(col("ts"), i + 3), element_at(col("ts"), i + 4)))).as("g")))
     val boiler = g.select(col("g"), col("doc_id")).distinct()
       .groupBy(col("g")).agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= 3)
@@ -1662,17 +1654,14 @@ object Quality {
     // AND the final accounting join; g feeds the boilerplate census AND
     // the coverage probe — without storage each consumer re-runs the
     // whole tokenize/explode (the tf_idf lesson; measured after the
-    // r16 consumption correction exposed the true cost). Swept by the
-    // bench janitor like every query-local temporary.
-    val t = docs(s, d).select(col("doc_id"), Dedup.tokensNE(col("text")).as("ts"))
-      .persist()
-    val g = t.filter(size(col("ts")) >= 5)
+    // r16 consumption correction exposed the true cost).
+    val t = persistOnce(docs(s, d).select(col("doc_id"), Dedup.tokensNE(col("text")).as("ts")))
+    val g = persistOnce(t.filter(size(col("ts")) >= 5)
       .select(col("doc_id"), explode(transform(sequence(lit(1), size(col("ts")) - 4),
         i => struct(i.as("i"), concat_ws(" ", element_at(col("ts"), i),
           element_at(col("ts"), i + 1), element_at(col("ts"), i + 2),
           element_at(col("ts"), i + 3), element_at(col("ts"), i + 4)).as("g")))).as("sg"))
-      .select(col("doc_id"), col("sg.i").as("i"), col("sg.g").as("g"))
-      .persist()
+      .select(col("doc_id"), col("sg.i").as("i"), col("sg.g").as("g")))
     val boiler = g.select(col("g"), col("doc_id")).distinct()
       .groupBy(col("g")).agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= 3).select(col("g"))
@@ -1965,8 +1954,8 @@ object Quality {
     // (an interpreted aggregate-over-characters HOF each) now run once
     // per DISTINCT token instead of once per occurrence, the corpus is
     // exploded once instead of twice, and the exact aggregate is shared
-    // by both consumers via the cache (query-local, janitor-swept).
-    val exact = toks.groupBy(col("t")).agg(count(lit(1)).as("c_exact")).persist()
+    // by both consumers via the cache (query-local).
+    val exact = persistOnce(toks.groupBy(col("t")).agg(count(lit(1)).as("c_exact")))
     val cells = exact.select(col("c_exact"), buckets(col("t")).as(Seq("row_id", "bucket")))
       .groupBy(col("row_id"), col("bucket")).agg(sum(col("c_exact")).as("c"))
     exact.select(col("t"), col("c_exact"),

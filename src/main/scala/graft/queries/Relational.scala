@@ -1085,10 +1085,9 @@ object Relational {
     * qualifying suppkeys travel to the supplier semi-join.
     */
   def q20VolumeSupplier(s: SparkSession, d: String): DataFrame = {
-    val pairq = Tables.lineitem(s, d)
+    val pairq = graft.MaterializedCaches.persistOnce(Tables.lineitem(s, d)
       .groupBy(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
-      .agg(sum(col("l_quantity").cast("long")).as("q"))
-      .persist()
+      .agg(sum(col("l_quantity").cast("long")).as("q")))
     val pq = pairq.groupBy(col("pk").as("ppk")).agg(sum(col("q")).as("tq"))
     val conc = pairq.join(pq, col("pk") === col("ppk"))
       .filter(lit(5L) * col("q") > col("tq"))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** A seeded, in-repo stand-in for the reference corpus (FIXTURES.md §1,
   * which names the original's provenance), so the engine reads no files
@@ -20,24 +20,43 @@ object ReferenceCorpus {
   val Vocab: Seq[String] = ("This a and each exactly expect five-thousand for input is library " +
     "mapreduce occurs see should test the times to word you").split(" ").toSeq
 
-  /** Directory holding the generated files; written once per JVM. It is
-    * not deleted at exit: the DuckDB oracle check reads it after the
-    * `Verify` JVM that named it has stopped.
+  /** Bumped whenever the generated content changes, so a directory
+    * written by an older generator is never reused.
     */
-  lazy val dir: String = {
-    val rnd = new scala.util.Random(20)
-    val tokens = rnd.shuffle(Vocab.flatMap(w => Seq.fill(5000)(w)))
-    // exponential weights over a 100-token floor: sizes spread roughly
-    // like the reference's 698 B – 85 KB files
-    val weights = Seq.fill(20)(-math.log(1.0 - rnd.nextDouble()))
-    val extra = tokens.size - 20 * 100
-    val sizes = weights.map(w => (w / weights.sum * extra).toInt + 100)
-    val cuts = sizes.init.scanLeft(0)(_ + _) :+ tokens.size
-    val out = Files.createTempDirectory("graft-refcorpus")
-    cuts.sliding(2).zipWithIndex.foreach { case (Seq(from, until), i) =>
-      Files.writeString(Paths.get(out.toString, s"sample${i + 1}.txt"),
-        tokens.slice(from, until).mkString(" "))
+  private val Version = 1
+
+  /** Directory holding the generated files: one per generator version
+    * under `java.io.tmpdir`, written by the first JVM that needs it and
+    * reused by every later one. It is not deleted at exit: the DuckDB
+    * oracle check reads it after the `Verify` JVM that named it has
+    * stopped.
+    */
+  lazy val dir: String = write()
+
+  /** Writes the corpus unless it is in place already; returns its path.
+    * The files go to a sibling temp directory that is then renamed into
+    * place, so no reader sees a partial corpus; a concurrent writer that
+    * loses the rename leaves its copy to [[graft.TempArtifacts]].
+    */
+  private[graft] def write(): String = {
+    val target = Paths.get(System.getProperty("java.io.tmpdir"), s"graft-refcorpus-v$Version")
+    if (!Files.isDirectory(target)) {
+      val rnd = new scala.util.Random(20)
+      val tokens = rnd.shuffle(Vocab.flatMap(w => Seq.fill(5000)(w)))
+      // exponential weights over a 100-token floor: sizes spread roughly
+      // like the reference's 698 B – 85 KB files
+      val weights = Seq.fill(20)(-math.log(1.0 - rnd.nextDouble()))
+      val extra = tokens.size - 20 * 100
+      val sizes = weights.map(w => (w / weights.sum * extra).toInt + 100)
+      val cuts = sizes.init.scanLeft(0)(_ + _) :+ tokens.size
+      val out = graft.TempArtifacts.create(s"graft-refcorpus-v$Version-")
+      cuts.sliding(2).zipWithIndex.foreach { case (Seq(from, until), i) =>
+        Files.writeString(Paths.get(out, s"sample${i + 1}.txt"),
+          tokens.slice(from, until).mkString(" "))
+      }
+      try Files.move(Paths.get(out), target, StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: java.io.IOException if Files.isDirectory(target) => () }
     }
-    out.toString
+    target.toString
   }
 }

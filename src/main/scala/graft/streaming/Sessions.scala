@@ -97,7 +97,7 @@ object Sessions {
   private val sessionCache = new graft.DfCache("sessions.sessionTable")
 
   def sessionTable(spark: SparkSession, sfDir: String): DataFrame =
-    sessionCache.getOrElseUpdate((spark, sfDir), sessionize(spark, sfDir).persist())
+    sessionCache.getOrElseUpdate((spark, sfDir), sessionize(spark, sfDir))
 
   /** Native Structured-Streaming-compatible sessionization run in batch:
     * `session_window(ts, 30 min)` — window end = last event + gap.

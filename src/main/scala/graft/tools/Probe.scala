@@ -4,7 +4,7 @@ import java.io.PrintStream
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import graft.{Bench, SparkEntry}
+import graft.{Bench, MaterializedCaches, SparkEntry}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -14,7 +14,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * given as separate arguments or comma-separated.
   *
   *   - `time`: three passes per query, each consumed as the bench
-  *     consumes it ([[graft.Bench.consume]]).
+  *     consumes it ([[graft.Bench.consume]]) in its own
+  *     [[graft.MaterializedCaches.scoped]].
   *   - `show`: the first 50 result rows.
   *   - `plan [-run]`: the optimized logical and the executed plan; `-run`
   *     executes the query first, so the printed adaptive plan is the
@@ -58,11 +59,11 @@ object Probe {
     // Console.withOut: Dataset.show prints through Console.out
     Console.withOut(out)(cmd match {
       case "time" => names.foreach { q =>
-        (1 to 3).foreach { i =>
+        (1 to 3).foreach(i => MaterializedCaches.scoped(spark) {
           val t0 = System.nanoTime()
           val n = Bench.consume(q, query(q))
           println(f"$q pass $i: ${(System.nanoTime() - t0) / 1e9}%.3f s rows=$n")
-        }
+        })
       }
       case "show" => names.foreach { q =>
         println(s"== $q @ $sfDir")

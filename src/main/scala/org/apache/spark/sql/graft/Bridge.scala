@@ -130,14 +130,32 @@ object Bridge {
     }
 
   /** Ids of the RDDs that back a cached DataFrame's InMemoryRelations
-    * (the storage blocks `persist()` actually holds). Used by the bench
-    * janitor to tell long-lived materialized artifacts apart from
-    * per-query temporary persists; building the id list runs no job
-    * (`cachedColumnBuffers` is lazy RDD construction).
+    * (the storage blocks `persist()` actually holds). Used to tell
+    * long-lived materialized artifacts apart from per-query temporary
+    * persists; building the id list runs no job (`cachedColumnBuffers`
+    * is lazy RDD construction).
     */
   def cachedRddIds(df: org.apache.spark.sql.DataFrame): Seq[Int] =
     df.queryExecution.withCachedData.collect {
       case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
         r.cacheBuilder.cachedColumnBuffers.id
     }
+
+  /** Id of the RDD holding the blocks of the cache entry for `df`'s
+    * plan, if that plan is cached. Unlike [[cachedRddIds]] it looks the
+    * entry up now, so it holds even when `df`'s plan was resolved before
+    * the persist.
+    */
+  def cacheEntryRddId(df: org.apache.spark.sql.DataFrame): Option[Int] =
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id)
+
+  /** Number of plans in the session's `CacheManager` (one per persisted
+    * plan, until `Dataset.unpersist` drops it).
+    */
+  def numCachedEntries(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.queries.Core
 import graft.sources.ReferenceCorpus
+import org.apache.spark.sql.graft.Bridge
 
 /** Sanity checks per tier-B query (the full hash-compare against DuckDB is
   * the driver's Verify gate; tools/check_oracle.py replicates it locally).
@@ -10,22 +11,37 @@ class CoreQueriesSpec extends SparkSuite {
 
   test("every declared query runs and returns rows at sf0.001") {
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    val sc = spark.sparkContext
+    // RDDs backing SessionCache frames: one per held cache entry
+    def held = MaterializedCaches.allDfs.flatMap(Bridge.cachedRddIds).toSet
     for ((name, fn) <- SparkEntry.queries) {
-      val df = fn(spark, sf0001)
-      // driver-sortable-output contract: the harness row-sorts results in
-      // pandas, where array/map/struct cells are unhashable and crash the
-      // gate (round-4 lesson: array_funcs2/lag_features/positional_index).
-      // Complex values must be serialized to strings before leaving a query.
-      val complex = df.schema.fields.collect {
-        case f if f.dataType.isInstanceOf[ArrayType]
-          || f.dataType.isInstanceOf[MapType]
-          || f.dataType.isInstanceOf[StructType] => f.name
+      val (rddsBefore, entriesBefore, heldBefore) =
+        (sc.getPersistentRDDs.keySet, Bridge.numCachedEntries(spark), held)
+      MaterializedCaches.scoped(spark) {
+        val df = fn(spark, sf0001)
+        // driver-sortable-output contract: the harness row-sorts results in
+        // pandas, where array/map/struct cells are unhashable and crash the
+        // gate (round-4 lesson: array_funcs2/lag_features/positional_index).
+        // Complex values must be serialized to strings before leaving a query.
+        val complex = df.schema.fields.collect {
+          case f if f.dataType.isInstanceOf[ArrayType]
+            || f.dataType.isInstanceOf[MapType]
+            || f.dataType.isInstanceOf[StructType] => f.name
+        }
+        assert(complex.isEmpty,
+          s"query $name outputs driver-unsortable columns ${complex.mkString(",")}: " +
+            "serialize arrays/maps/structs to strings (inverted_index pattern)")
+        val n = df.count()
+        assert(n > 0, s"query $name returned no rows")
       }
-      assert(complex.isEmpty,
-        s"query $name outputs driver-unsortable columns ${complex.mkString(",")}: " +
-          "serialize arrays/maps/structs to strings (inverted_index pattern)")
-      val n = df.count()
-      assert(n > 0, s"query $name returned no rows")
+      // the scope released what the query cached, except what a
+      // SessionCache now holds: no stale CacheManager entry, no blocks
+      val heldAfter = held
+      val entries = Bridge.numCachedEntries(spark) - entriesBefore
+      assert(entries <= (heldAfter -- heldBefore).size,
+        s"query $name left $entries cache entries, ${(heldAfter -- heldBefore).size} held")
+      val rdds = sc.getPersistentRDDs.keySet -- rddsBefore -- heldAfter
+      assert(rdds.isEmpty, s"query $name left persistent RDDs $rdds")
     }
   }
 
@@ -40,6 +56,16 @@ class CoreQueriesSpec extends SparkSuite {
     assert(rows.forall(_.getLong(1) == 5000L))
     // total ORDER BY: ascending byte order, 'This' first
     assert(rows.head.getString(0) == "This")
+  }
+
+  test("ReferenceCorpus is written once per generator version and reused") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    def corpusDirs = scala.util.Using.resource(Files.list(Path.of(ReferenceCorpus.dir).getParent))(
+      _.iterator().asScala.filter(_.getFileName.toString.startsWith("graft-refcorpus")).toSet)
+    val before = corpusDirs
+    assert(ReferenceCorpus.write() == ReferenceCorpus.dir)
+    assert(corpusDirs == before, "a second write added a directory")
   }
 
   test("wordcount_files' oracle SQL reads the directory the query reads") {

@@ -10,15 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class LayoutSpec extends SparkSuite {
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("bucketed-to-bucketed join plans with zero Exchange") {
     Layout.writeBucketed(Tables.orders(spark, sf0001)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
@@ -27,7 +18,7 @@ class LayoutSpec extends SparkSuite {
       .select(col("c_custkey"), col("c_mktsegment")),
       "graft_customer_bkt", 8, "c_custkey")
     // force the shuffle-or-not decision to matter (no broadcast escape)
-    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = Layout.bucketedJoin(spark, "graft_orders_bkt", "graft_customer_bkt",
         "o_custkey", "c_custkey")
       val plan = j.queryExecution.executedPlan.toString
@@ -51,7 +42,7 @@ class LayoutSpec extends SparkSuite {
     // avoidance, not pruning — without an interesting required
     // distribution it silently falls back to a full scan, so pin the
     // bucketed read on for this check
-    withConf("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false") {
+    withConf("spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       val one = spark.table("graft_customer_bkt").filter(col("c_custkey") === 42)
       val plan = one.queryExecution.executedPlan.toString
       assert(plan.contains("SelectedBucketsCount: 1 out of 8"), plan.take(2000))

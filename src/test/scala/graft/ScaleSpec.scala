@@ -236,27 +236,29 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("mega-bucket triangle pre-shard is LOSSLESS: sharded equals unsharded") {
-    import spark.implicits._
-    val hsets = graft.operators.Dedup.shingleHashSets(Tables.documents(spark, sf0001))
-    def pairs(shardAbove: Int) =
-      graft.operators.Dedup.minhashPairsFrom(hsets, 0.5, 2, shardAbove)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // thr=2 pushes every multi-member bucket through the pivot path;
-    // shardAbove=4 then triangle-shards every bucket above 4 members —
-    // the sharded output must equal the single-row (unsharded) output
-    val unsharded = pairs(Int.MaxValue)
-    assert(unsharded.nonEmpty)
-    assert(pairs(4) == unsharded)
-    // synthetic mega pileup: 100 identical docs collide in one 100-member
-    // bucket per band; shardAbove=8 splits each into ceil(100/8)=13
-    // shards / 91 sub-buckets, no row wider than ~16 members, and the
-    // full true-duplicate pair set must still come out
-    val pile = (0L until 100L).map(i => (i, "aa bb cc dd ee ff gg"))
-      .toDF("doc_id", "text")
-    val got = graft.operators.Dedup.minhashPairsFrom(
-      graft.operators.Dedup.shingleHashSets(pile), 0.5, 8, 8).count()
-    assert(got == 100L * 99L / 2L, s"got $got")
-    graft.operators.Dedup.sweepTemporaries()
+    // the pair frames' bucket aggregates are released with the scope
+    MaterializedCaches.scoped(spark) {
+      import spark.implicits._
+      val hsets = graft.operators.Dedup.shingleHashSets(Tables.documents(spark, sf0001))
+      def pairs(shardAbove: Int) =
+        graft.operators.Dedup.minhashPairsFrom(hsets, 0.5, 2, shardAbove)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      // thr=2 pushes every multi-member bucket through the pivot path;
+      // shardAbove=4 then triangle-shards every bucket above 4 members —
+      // the sharded output must equal the single-row (unsharded) output
+      val unsharded = pairs(Int.MaxValue)
+      assert(unsharded.nonEmpty)
+      assert(pairs(4) == unsharded)
+      // synthetic mega pileup: 100 identical docs collide in one 100-member
+      // bucket per band; shardAbove=8 splits each into ceil(100/8)=13
+      // shards / 91 sub-buckets, no row wider than ~16 members, and the
+      // full true-duplicate pair set must still come out
+      val pile = (0L until 100L).map(i => (i, "aa bb cc dd ee ff gg"))
+        .toDF("doc_id", "text")
+      val got = graft.operators.Dedup.minhashPairsFrom(
+        graft.operators.Dedup.shingleHashSets(pile), 0.5, 8, 8).count()
+      assert(got == 100L * 99L / 2L, s"got $got")
+    }
   }
 
   test("seeded sampling is reproducible and approximately sized (training-split tooling)") {

@@ -110,6 +110,36 @@ class SharedRewriteSpec extends SparkSuite {
     assert(graft.streaming.Sessions.sessionTable(spark, sf0001).count() > 0)
   }
 
+  test("a scope releases its temporaries' cache entries, so the plan caches again") {
+    import org.apache.spark.storage.StorageLevel
+    def plan = spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count()
+    val entries = Bridge.numCachedEntries(spark)
+    MaterializedCaches.scoped(spark) {
+      val t = MaterializedCaches.persistOnce(plan)
+      assert(t.storageLevel != StorageLevel.NONE)
+      assert(t.count() == 7)
+    }
+    assert(Bridge.numCachedEntries(spark) == entries)
+    val again = plan
+    assert(again.storageLevel == StorageLevel.NONE)
+    MaterializedCaches.scoped(spark) {
+      MaterializedCaches.persistOnce(again)
+      assert(again.storageLevel != StorageLevel.NONE)
+    }
+    assert(again.storageLevel == StorageLevel.NONE)
+  }
+
+  test("persisting releases only what it cached: a DfCache frame stays cached") {
+    import org.apache.spark.storage.StorageLevel
+    val t = graft.streaming.Sessions.sessionTable(spark, sf0001)
+    assert(t.storageLevel != StorageLevel.NONE)
+    MaterializedCaches.persisting(t)(t.count())
+    assert(t.storageLevel != StorageLevel.NONE)
+    val own = spark.range(10).selectExpr("id * 3 AS x")
+    MaterializedCaches.persisting(own)(assert(own.storageLevel != StorageLevel.NONE))
+    assert(own.storageLevel == StorageLevel.NONE)
+  }
+
   /** Main sources (paths relative to src/main/scala) in which `pattern`
     * matches, other than the `allowed` files.
     */
@@ -131,6 +161,15 @@ class SharedRewriteSpec extends SparkSuite {
     // invalidateAll; every such memo so far was a TrieMap field
     val offenders = mainSourcesMatching("TrieMap", Set("graft/MaterializedCaches.scala"))
     assert(offenders.isEmpty, s"TrieMap outside MaterializedCaches.scala: $offenders")
+  }
+
+  test("no DataFrame is persisted or released outside MaterializedCaches") {
+    // a persist that bypasses MaterializedCaches escapes every scope, and
+    // a bare unpersist may drop a cache entry another frame reads; the
+    // RDD-level release of checkpoint blocks (Bridge) is not a DataFrame's
+    val offenders = mainSourcesMatching(raw"\.persist\(|\.cache\(\)|(?<!rdd)\.unpersist\(",
+      Set("graft/MaterializedCaches.scala"))
+    assert(offenders.isEmpty, s"persist/cache/unpersist outside MaterializedCaches.scala: $offenders")
   }
 
   test("no entry point builds its own session outside GraftSession") {

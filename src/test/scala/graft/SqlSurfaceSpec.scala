@@ -40,29 +40,34 @@ class SqlSurfaceSpec extends SparkSuite {
 
   test("graft_sorted_intersect_elems equals array_intersect on sorted " +
       "arrays, through the CODEGEN'd dataframe path") {
-    GraftFunctions.register(spark)
-    val r = spark.sql(
-      """SELECT graft_sorted_intersect_elems(array(1L, 3L, 7L), array(3L, 5L, 7L)) AS e,
-        |  graft_sorted_intersect_elems(array(1L), array(2L)) AS none,
-        |  graft_sorted_intersect_elems(CAST(array() AS ARRAY<BIGINT>), array(1L)) AS empt
-        |""".stripMargin).collect().head
-    assert(r.getSeq[Long](0) == Seq(3L, 7L))
-    assert(r.getSeq[Long](1).isEmpty && r.getSeq[Long](2).isEmpty)
-    // equivalence vs array_intersect over real sorted adjacency-like data
-    val hs = graft.operators.Dedup.shingleHashSets(
-      graft.sources.Tables.documents(spark, sf0001))
-    val diff = hs.select(col("hs").as("a"),
-        slice(col("hs"), lit(1), greatest(size(col("hs")) - 2, lit(1))).as("b"))
-      .select(
-        graft.functions.SketchExprs.sortedIntersect(col("a"), col("b")).as("native"),
-        sort_array(array_intersect(col("a"), col("b"))).as("builtin"))
-      .filter(col("native") =!= col("builtin")).count()
-    assert(diff == 0)
-    // wrong element type rejected at analysis
-    val e = intercept[Exception] {
-      spark.sql("SELECT graft_sorted_intersect_elems(array('a'), array('a'))").collect()
+    // a generated-code compile error fails the test instead of falling
+    // back to interpreted evaluation
+    withConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false") {
+      GraftFunctions.register(spark)
+      val r = spark.sql(
+        """SELECT graft_sorted_intersect_elems(array(1L, 3L, 7L), array(3L, 5L, 7L)) AS e,
+          |  graft_sorted_intersect_elems(array(1L), array(2L)) AS none,
+          |  graft_sorted_intersect_elems(CAST(array() AS ARRAY<BIGINT>), array(1L)) AS empt
+          |""".stripMargin).collect().head
+      assert(r.getSeq[Long](0) == Seq(3L, 7L))
+      assert(r.getSeq[Long](1).isEmpty && r.getSeq[Long](2).isEmpty)
+      // equivalence vs array_intersect over real sorted adjacency-like data
+      val hs = graft.operators.Dedup.shingleHashSets(
+        graft.sources.Tables.documents(spark, sf0001))
+      val diff = hs.select(col("hs").as("a"),
+          slice(col("hs"), lit(1), greatest(size(col("hs")) - 2, lit(1))).as("b"))
+        .select(
+          graft.functions.SketchExprs.sortedIntersect(col("a"), col("b")).as("native"),
+          sort_array(array_intersect(col("a"), col("b"))).as("builtin"))
+        .filter(col("native") =!= col("builtin")).count()
+      assert(diff == 0)
+      // wrong element type rejected at analysis
+      val e = intercept[Exception] {
+        spark.sql("SELECT graft_sorted_intersect_elems(array('a'), array('a'))").collect()
+      }
+      assert(e.getMessage.contains("array<bigint>"), e.getMessage)
     }
-    assert(e.getMessage.contains("array<bigint>"), e.getMessage)
   }
 
   test("graft_counteq equals the HOF tf formulation and handles edges") {
