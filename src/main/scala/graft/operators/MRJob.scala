@@ -34,15 +34,16 @@ import org.apache.spark.TaskContext
   * [[run]] and [[runAgg]] share one in-mapper combine: each map task
   * folds its emits per key in a JVM hash map and ships one row per key
   * per flush, instead of one row per emit (the reference ships every
-  * emit). A task flushes when it holds [[FlushBound]] buffered values
-  * (`run`) or distinct keys (`runAgg`), so its memory does not grow with
-  * the input. The results stay exact because the reduce side merges any
-  * number of partial rows per key: a key split across flushes or tasks,
-  * or whose JVM equality is finer than Spark's grouping (`Array[Byte]`
-  * compares by identity), only combines less. Everything after the
-  * combine — shuffle, grouping, reduce — is Catalyst/Tungsten's. The shim
-  * exists so a reference user can bring arbitrary mapper/reducer pairs —
-  * relational queries should use the DataFrame API directly
+  * emit); `run`'s row holds the key's values run-length encoded. A task
+  * flushes when it holds [[FlushBound]] buffered values (`run`, counted
+  * before encoding) or distinct keys (`runAgg`), so its memory does not
+  * grow with the input. The results stay exact because the reduce side
+  * merges any number of partial rows per key: a key split across flushes
+  * or tasks, or whose JVM equality is finer than Spark's grouping
+  * (`Array[Byte]` compares by identity), only combines less. Everything
+  * after the combine — shuffle, grouping, reduce — is Catalyst/Tungsten's.
+  * The shim exists so a reference user can bring arbitrary mapper/reducer
+  * pairs — relational queries should use the DataFrame API directly
   * (graft.queries).
   */
 object MRJob {
@@ -76,10 +77,24 @@ object MRJob {
     */
   def getlines(spark: SparkSession, dir: String): Dataset[String] = {
     import spark.implicits._
-    // an empty file yields zero getline records, but "".split(...) yields
-    // Array("") — filter the empty-file case explicitly
-    wholeFiles(spark, dir).flatMap(s =>
-      if (s.isEmpty) Iterator.empty else s.split("(?<=\n)").iterator)
+    wholeFiles(spark, dir).flatMap(getlineRecords)
+  }
+
+  /** One whole-file record cut after each `\n`, the `\n` kept; a final
+    * unterminated line is its own record and an empty file yields none.
+    * One `indexOf` scan, no regex.
+    */
+  private[graft] def getlineRecords(s: String): Iterator[String] = new Iterator[String] {
+    private var from = 0
+    override def hasNext: Boolean = from < s.length
+    override def next(): String = {
+      if (!hasNext) Iterator.empty.next()
+      val nl = s.indexOf('\n', from)
+      val until = if (nl < 0) s.length else nl + 1
+      val line = s.substring(from, until)
+      from = until
+      line
+    }
   }
 
   /** A11 — shortest-job-first task ordering (`mapreduce.c:24-29,55-71`:
@@ -134,25 +149,32 @@ object MRJob {
   /** MR_Run with the intended (race-free) semantics: map -> shuffle on key
     * -> grouped reduce. Returns the reducer's output dataset.
     *
-    * Each map task packs a key's values into one `Seq[V]` row per flush
-    * (see the object doc); the reducer gets the concatenation of a key's
-    * rows, so it still sees every emitted value, in unspecified order as
-    * in the reference. `kv` is unused and kept for source compatibility.
+    * Each map task packs a key's values into one row per flush (see the
+    * object doc), run-length encoded: consecutive values that are the
+    * same value (see [[ValueRuns]]) travel as one `(value, count)` pair,
+    * so a count job's `"1"` emits ship as one pair per key and flush. The
+    * reduce side repeats each value `count` times, so the reducer still
+    * sees every emitted value, in unspecified order as in the reference.
+    * `kv` is unused and kept for source compatibility.
     */
   def run[K: Encoder, V: Encoder, OUT: Encoder](
       input: Dataset[String],
       mapper: String => IterableOnce[(K, V)],
       reducer: (K, Iterator[V]) => OUT)(
       implicit kv: Encoder[(K, V)]): Dataset[OUT] = {
-    val values: Encoder[Seq[V]] = ExpressionEncoder(AgnosticEncoders.IterableEncoder(
-      classTag[Seq[V]], AgnosticEncoders.agnosticEncoderFor(implicitly[Encoder[V]]),
-      containsNull = true, lenientSerialization = false))
+    val runs: Encoder[Seq[(V, Int)]] = ExpressionEncoder(AgnosticEncoders.IterableEncoder(
+      classTag[Seq[(V, Int)]],
+      AgnosticEncoders.agnosticEncoderFor(Encoders.tuple(implicitly[Encoder[V]], Encoders.scalaInt)),
+      containsNull = false, lenientSerialization = false))
     input
-      .mapPartitions(lines => new InMapperCombiner[K, V, Seq[V]](
-        lines, mapper, () => Nil, (vs, v) => v +: vs, perValue = true))(
-        Encoders.tuple(implicitly[Encoder[K]], values))
+      .mapPartitions(lines => new InMapperCombiner[K, V, ValueRuns[V]](
+        lines, mapper, () => new ValueRuns[V], _ add _, perValue = true)
+        .map { case (k, vs) => (k, vs.result()) })(
+        Encoders.tuple(implicitly[Encoder[K]], runs))
       .groupByKey(_._1)
-      .mapGroups((k, it) => reducer(k, it.flatMap(_._2.iterator)))
+      .mapGroups((k, it) => reducer(k, it.flatMap(_._2.iterator.flatMap {
+        case (v, n) => Iterator.fill(n)(v)
+      })))
   }
 
   /** MR_Run with a typed Aggregator reducer: same API shape as [[run]] but
@@ -196,7 +218,11 @@ object MRJob {
     * shuffle: djb2(key) % P routing, so physical partition == reference
     * partition id, and keys in strcmp order within each partition —
     * unsigned UTF-8 bytes, not the JVM's UTF-16 code-unit order (the two
-    * diverge for supplementary code points).
+    * diverge for supplementary code points). It works on JVM strings, so
+    * a mapper's lone surrogates route and sort as the `?` the UTF-8
+    * encoder writes for them; a string column would have rewritten them
+    * before routing, which is why [[runPartitioned]] does not go through
+    * Catalyst the way [[TextSink]] does.
     */
   private[operators] def djb2Sorted(kv: RDD[(String, String)], numPartitions: Int): RDD[(String, String)] = {
     implicit val strcmpOrder: Ordering[String] = graft.functions.Utf8ByteOrdering
@@ -270,6 +296,49 @@ private final class InMapperCombiner[K, V, B](
       }
     }
     out = buf.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue))
+  }
+}
+
+/** [[MRJob.run]]'s buffer of one key's values in one flush, run-length
+  * encoded: `add` extends the last run when the value is the same value
+  * as the run's, and starts a new run otherwise.
+  */
+private final class ValueRuns[V] {
+  private val runs = scala.collection.mutable.ArrayBuffer.empty[(V, Int)]
+  private var last: V = _
+  private var count = 0
+
+  def add(v: V): ValueRuns[V] = {
+    if (count > 0 && ValueRuns.same(last, v)) count += 1
+    else { if (count > 0) runs += ((last, count)); last = v; count = 1 }
+    this
+  }
+
+  def result(): Seq[(V, Int)] = { if (count > 0) runs += ((last, count)); count = 0; runs.toSeq }
+}
+
+private object ValueRuns {
+
+  /** Whether `b` may travel as a repeat of `a`: the reducer must get back
+    * exactly what was emitted. Strings and boxed integral values compare
+    * with `equals`, floating-point values by their bits (`==` takes 0.0
+    * for -0.0), and any other value only when it is the same object —
+    * `==` on a tuple or case class compares its doubles with `==` too.
+    */
+  def same(a: Any, b: Any): Boolean = a match {
+    case x: java.lang.Double => b match {
+      case y: java.lang.Double =>
+        java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(y)
+      case _ => false
+    }
+    case x: java.lang.Float => b match {
+      case y: java.lang.Float =>
+        java.lang.Float.floatToRawIntBits(x) == java.lang.Float.floatToRawIntBits(y)
+      case _ => false
+    }
+    case _: String | _: java.lang.Integer | _: java.lang.Long | _: java.lang.Short |
+        _: java.lang.Byte | _: java.lang.Character | _: java.lang.Boolean => a.equals(b)
+    case _ => a.asInstanceOf[AnyRef] eq b.asInstanceOf[AnyRef]
   }
 }
 

@@ -1,6 +1,9 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, LinkOption, Path, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** A seeded, in-repo stand-in for the reference corpus (FIXTURES.md §1,
   * which names the original's provenance), so the engine reads no files
@@ -29,9 +32,30 @@ object ReferenceCorpus {
     * under `java.io.tmpdir`, written by the first JVM that needs it and
     * reused by every later one. It is not deleted at exit: the DuckDB
     * oracle check reads it after the `Verify` JVM that named it has
-    * stopped.
+    * stopped. The first use in a JVM deletes the unversioned corpora
+    * older code left there ([[sweepStale]]).
     */
-  lazy val dir: String = write()
+  lazy val dir: String = {
+    sweepStale(Paths.get(System.getProperty("java.io.tmpdir")))
+    write()
+  }
+
+  /** A corpus written before corpora were versioned: each JVM wrote its
+    * own and none deleted it. A `graft-refcorpus-v<k>` corpus of another
+    * generator version is kept: a JVM of another checkout, or the oracle
+    * check after it, may be reading it now.
+    */
+  private val Stale = """graft-refcorpus\d+""".r
+
+  /** Deletes every stale corpus directory directly under `base`; a
+    * directory another JVM deletes at the same time is skipped.
+    */
+  private[graft] def sweepStale(base: Path): Unit =
+    Using.resource(Files.list(base))(_.iterator().asScala.toList).foreach { d =>
+      if (Stale.matches(d.getFileName.toString) && Files.isDirectory(d, LinkOption.NOFOLLOW_LINKS))
+        try Using.resource(Files.walk(d))(_.iterator().asScala.toList.reverse.foreach(Files.deleteIfExists))
+        catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+    }
 
   /** Writes the corpus unless it is in place already; returns its path.
     * The files go to a sibling temp directory that is then renamed into

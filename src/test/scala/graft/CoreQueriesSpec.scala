@@ -68,6 +68,29 @@ class CoreQueriesSpec extends SparkSuite {
     assert(corpusDirs == before, "a second write added a directory")
   }
 
+  test("ReferenceCorpus sweeps unversioned corpus directories, and only those") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val base = Files.createTempDirectory("graft-sweep")
+    val stale = Set("graft-refcorpus16062038682497489391", "graft-refcorpus7")
+    // every versioned corpus stays, whatever its version: another checkout may be reading it
+    val kept = Set("graft-refcorpus-v0", "graft-refcorpus-v1", "graft-refcorpus-v2",
+      "graft-refcorpus-v1-8378130159382059120", "graft-refcorpus-v0-724429123158925585",
+      "graft-refcorpus-vx", "graft-refcorpus", "graft-refcorpus12x", "other")
+    (stale ++ kept).foreach { n =>
+      Files.createDirectories(base.resolve(n).resolve("sub"))
+      Files.writeString(base.resolve(n).resolve("sub").resolve("sample1.txt"), "a b")
+    }
+    Files.writeString(base.resolve("graft-refcorpus42"), "a file, not a corpus")
+    def names = scala.util.Using.resource(Files.list(base))(
+      _.iterator().asScala.map(_.getFileName.toString).toSet)
+    try {
+      ReferenceCorpus.sweepStale(base)
+      assert(names == kept + "graft-refcorpus42")
+    } finally scala.util.Using.resource(Files.walk(base))(
+      _.iterator().asScala.toList.reverse.foreach(Files.delete))
+  }
+
   test("wordcount_files' oracle SQL reads the directory the query reads") {
     val sql = SparkEntry.oracleSql("wordcount_files")
     assert(sql.contains(s"read_text('${ReferenceCorpus.dir}/*.txt')"), sql)

@@ -1,8 +1,9 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import graft.functions.Djb2
 import graft.operators.{GroupedKeyIterator, MRAggregators, MRJob, TextSink}
 import graft.sources.ReferenceCorpus
 import org.apache.spark.graft.JobCounter
@@ -197,6 +198,44 @@ class MRJobSpec extends SparkSuite {
     assert(aggRows <= maxRows, s"runAgg wrote $aggRows shuffle records, bound $maxRows")
   }
 
+  test("run: interleaved values (a, b, a, a) reach the reducer as the multiset {a x3, b}") {
+    import spark.implicits._
+    val oneTask = spark.createDataset(spark.sparkContext.parallelize(Seq("a b a a"), 1))
+    val mapper: String => IterableOnce[(String, String)] =
+      line => line.split(" ").iterator.map(v => ("k", v))
+    val got = MRJob.run[String, String, (String, Seq[String])](oneTask, mapper,
+      (k, vs) => (k, vs.toSeq.sorted)).collect()
+    assert(got.toSeq == Seq("k" -> Seq("a", "a", "a", "b")))
+  }
+
+  test("run: 0.0 and -0.0 reach the reducer as emitted, bare and inside a tuple") {
+    import spark.implicits._
+    val oneTask = spark.createDataset(spark.sparkContext.parallelize(Seq("0 -0 -0 0"), 1))
+    val signs = Seq("0.0", "-0.0", "-0.0", "0.0")
+    val bare = MRJob.run[String, Double, Seq[String]](oneTask,
+      line => line.split(" ").iterator.map(z => ("k", if (z == "0") 0.0 else -0.0)),
+      (_, vs) => vs.map(_.toString).toSeq.sorted).collect()
+    assert(bare.toSeq == Seq(signs.sorted))
+    val tupled = MRJob.run[String, (Double, Int), Seq[String]](oneTask,
+      line => line.split(" ").iterator.map(z => ("k", (if (z == "0") 0.0 else -0.0, 1))),
+      (_, vs) => vs.map(_.toString).toSeq.sorted).collect()
+    assert(tupled.toSeq == Seq(signs.map(d => s"($d,1)").sorted))
+  }
+
+  test("run ships run-length values: shuffle bytes on the reference corpus stay small") {
+    import spark.implicits._
+    val input = MRJob.getlines(spark, ReferenceCorpus.dir)
+    // one (key, [("1", count)]) row per key and task, each well under 64 B;
+    // a row holding every "1" a task emits for a key (~250 here) is not
+    val bound = input.rdd.getNumPartitions * 21 * 64L
+    val (out, bytes) = JobCounter.shuffleBytes(spark) {
+      MRJob.run[String, String, (String, Long)](input, wcMapper, (k, vs) => (k, vs.size.toLong))
+        .collect()
+    }
+    assert(out.length == 21 && out.forall(_._2 == 5000L))
+    assert(bytes <= bound, s"run wrote $bytes shuffle bytes, bound $bound")
+  }
+
   test("GroupedKeyIterator: one call per unique key; unconsumed values skipped") {
     val data = Iterator(("a", "1"), ("a", "2"), ("b", "1"), ("c", "1"), ("c", "2"), ("c", "3"))
     val g = new GroupedKeyIterator(data)
@@ -224,6 +263,62 @@ class MRJobSpec extends SparkSuite {
     val p5 = Files.readString(java.nio.file.Paths.get(dir, "result-5.txt"))
     // ascending byte order: 'This' (0x54) before 'exactly' before 'word'
     assert(p5 == "This: 5000\nexactly: 5000\nword: 5000\n")
+  }
+
+  test("TextSink under AQE: djb2 % P routing, unsigned UTF-8 key order, exact bytes, P = 10, 3, 1") {
+    import spark.implicits._
+    val emoji = new String(Character.toChars(0x1F600)) // UTF-8 F0 9F 98 80
+    val pua = "\uE000" // UTF-8 EE 80 80: before the emoji in bytes, after it in UTF-16
+    val keys = Seq("This", "a", "and", "", "\u00e9t\u00e9", emoji, pua, s"${emoji}x", s"${pua}x", "Z",
+      "zz") ++ (1 to 200).map(i => s"k$i")
+    val rows = keys.zipWithIndex.map { case (k, i) => (k, i.toLong) }
+    def strcmp(a: String, b: String): Boolean =
+      java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8)) < 0
+    withConf("spark.sql.adaptive.enabled" -> "true", "spark.sql.shuffle.partitions" -> "4") {
+      Seq(10, 3, 1).foreach { p =>
+        val dir = Files.createTempDirectory("graft-sink-aqe").toString
+        val files = TextSink.write(spark, rows.toDF("key", "value").repartition(5), dir, p)
+        val expected = rows.groupBy { case (k, _) => Djb2.partition(k, p) }.map { case (pid, rs) =>
+          s"result-$pid.txt" ->
+            rs.sortWith((a, b) => strcmp(a._1, b._1)).map { case (k, v) => s"$k: $v\n" }.mkString
+        }
+        assert(files.map(f => Paths.get(f).getFileName.toString).toSet == expected.keySet, s"P=$p")
+        expected.foreach { case (name, text) =>
+          assert(Files.readAllBytes(Paths.get(dir, name)).sameElements(text.getBytes(UTF_8)),
+            s"P=$p $name")
+        }
+        if (p == 1) {
+          val one = Files.readString(Paths.get(dir, "result-0.txt"))
+          assert(one.indexOf(s"$pua: ") < one.indexOf(s"$emoji: "))
+        }
+      }
+    }
+  }
+
+  test("TextSink: a null key fails with an IllegalArgumentException naming the column") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-sink-null").toString
+    val df = Seq[(String, String)](("a", "1"), (null, "2"), ("b", "3")).toDF("key", "value")
+    val e = intercept[IllegalArgumentException](TextSink.write(spark, df, dir, 3))
+    assert(e.getMessage.contains("`key`"), e.getMessage)
+  }
+
+  test("TextSink: a null value fails with an IllegalArgumentException naming the column") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-sink-null").toString
+    val df = Seq[(String, String)](("a", "1"), ("b", null)).toDF("key", "value")
+    val e = intercept[IllegalArgumentException](TextSink.write(spark, df, dir, 3))
+    assert(e.getMessage.contains("`value`") && e.getMessage.contains("'b'"), e.getMessage)
+  }
+
+  test("TextSink: an exception of the upstream plan keeps its job context") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-sink-upstream").toString
+    val df = Seq("a", "b").toDS().map { k =>
+      if (k == "b") throw new IllegalArgumentException("upstream") else (k, "1")
+    }.toDF("key", "value")
+    val e = intercept[org.apache.spark.SparkException](TextSink.write(spark, df, dir, 3))
+    assert(e.getCause.getMessage == "upstream", e.getMessage)
   }
 
   test("A11 sjfFiles: one task per file, partition index = ascending-size rank") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{Bpe, Djb2, Utf8ByteOrdering, ZOrder}
+import graft.operators.MRJob
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -74,6 +75,22 @@ class PropertySpec extends AnyFunSuite {
       Integer.signum(Utf8ByteOrdering.compare(a, b)) ==
         -Integer.signum(Utf8ByteOrdering.compare(b, a))
     })
+  }
+
+  test("getline records equal the regex split they replace, newline-kept") {
+    // the former formulation: split after each \n, an empty file yields none
+    def regexLines(s: String): Seq[String] =
+      if (s.isEmpty) Nil else s.split("(?<=\n)").toSeq
+    val piece = Gen.frequency(
+      4 -> Gen.alphaNumStr, 2 -> Gen.const("\n"), 1 -> Gen.const("\r\n"),
+      1 -> Gen.const("\n\n\n"), 1 -> Gen.const(" "), 1 -> cpStr)
+    val text = Gen.frequency(1 -> Gen.const(""), 9 -> Gen.listOf(piece).map(_.mkString))
+    check("getlines")(Prop.forAll(text) { s =>
+      val got = MRJob.getlineRecords(s).toSeq
+      got == regexLines(s) && got.mkString == s && got.forall(_.nonEmpty)
+    })
+    assert(MRJob.getlineRecords("").isEmpty)
+    assert(MRJob.getlineRecords("\na\r\n\nb").toSeq == Seq("\n", "a\r\n", "\n", "b"))
   }
 
   private def mortonRef(x: Long, y: Long): Long = {

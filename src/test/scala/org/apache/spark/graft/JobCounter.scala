@@ -5,10 +5,10 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Counts the Spark jobs a block launches, and the shuffle records its
-  * tasks write. Lives under `org.apache.spark` to drain the listener bus
-  * (`private[spark]`) before and after, so no event is lost to the bus's
-  * asynchrony.
+/** Counts the Spark jobs a block launches, and the shuffle records and
+  * bytes its tasks write. Lives under `org.apache.spark` to drain the
+  * listener bus (`private[spark]`) before and after, so no event is lost
+  * to the bus's asynchrony.
   */
 object JobCounter {
   def apply[T](spark: SparkSession)(body: => T): (T, Int) = {
@@ -22,13 +22,22 @@ object JobCounter {
     (out, c.shuffleRecords.get)
   }
 
+  /** The block's result and the shuffle bytes all its tasks wrote. */
+  def shuffleBytes[T](spark: SparkSession)(body: => T): (T, Long) = {
+    val (out, c) = counted(spark)(body)
+    (out, c.shuffleBytes.get)
+  }
+
   private final class Counts extends SparkListener {
     val jobs = new AtomicInteger
     val shuffleRecords = new AtomicLong
+    val shuffleBytes = new AtomicLong
     override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      if (e.taskMetrics != null)
+      if (e.taskMetrics != null) {
         shuffleRecords.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+        shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
   }
 
   private def counted[T](spark: SparkSession)(body: => T): (T, Counts) = {
