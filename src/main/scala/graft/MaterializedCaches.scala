@@ -12,14 +12,15 @@ import scala.collection.concurrent.TrieMap
   * Every instance registers itself, so [[MaterializedCaches.invalidateAll]]
   * releases all of them.
   *
-  * Staleness caveat (all three kinds): entries are keyed by path, not by
-  * file content — if the parquet files under an sfDir are rewritten while
-  * a JVM holds an entry, consumers keep reading the stale DataFrame
-  * blocks, scalar or artifact until [[MaterializedCaches.invalidateAll]]
-  * (or [[clear]]) is called. Tools and tests that rewrite inputs must
-  * invalidate first; long-lived multi-session apps should invalidate when
-  * retiring a session so the strong session references and their storage
-  * blocks are released. A path entry is only forgotten: its files stay on
+  * Staleness caveat (all three kinds, and the parquet schemas
+  * [[graft.sources.Tables]] holds in one): entries are keyed by path, not
+  * by file content — if the parquet files under an sfDir are rewritten
+  * while a JVM holds an entry, consumers keep reading the stale DataFrame
+  * blocks, scalar, artifact or schema until
+  * [[MaterializedCaches.invalidateAll]] (or [[clear]]) is called. Tools
+  * and tests that rewrite inputs must invalidate first; long-lived
+  * multi-session apps should invalidate when retiring a session so the
+  * strong session references and their storage blocks are released. A path entry is only forgotten: its files stay on
   * disk, a temp directory until [[TempArtifacts]] deletes it at JVM exit.
   *
   * @param release frees an entry's resources when it is dropped

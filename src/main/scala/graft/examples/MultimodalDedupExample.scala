@@ -1,6 +1,5 @@
 package graft.examples
 
-import graft.operators.Multimodal
 import graft.queries.Pipeline
 import org.apache.spark.sql.functions._
 

@@ -57,7 +57,6 @@ object MRJob {
     * [[getlines]] when exact empty-token parity matters.
     */
   def lines(spark: SparkSession, paths: Seq[String]): Dataset[String] = {
-    import spark.implicits._
     spark.read.textFile(paths: _*)
   }
 
@@ -65,7 +64,6 @@ object MRJob {
     * `mapreduce.c:56-75`; use when per-file lineage matters).
     */
   def wholeFiles(spark: SparkSession, dir: String): Dataset[String] = {
-    import spark.implicits._
     spark.read.option("wholetext", "true").textFile(dir)
   }
 

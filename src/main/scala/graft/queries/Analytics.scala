@@ -943,7 +943,7 @@ object Analytics {
     * derived with integer arithmetic — no date parsing parity risk.
     */
   def dppJoin(s: SparkSession, d: String): DataFrame = {
-    val fact = s.read.parquet(graft.sources.Layout.partitionedOrders(s, d))
+    val fact = Tables.parquet(s, graft.sources.Layout.partitionedOrders(s, d))
     val dim = s.range(1, 13).select(col("id").cast("int").as("omonth"),
       expr("CAST((id - 1) DIV 3 + 1 AS INT)").as("quarter"))
     fact.join(broadcast(dim.filter(col("quarter") === 2)), Seq("omonth"))

@@ -140,10 +140,9 @@ object Curation {
     * spec); the first step lands every key deep in the ring, the second
     * wraps. Max intermediate (2^31-2) * 48271 ≈ 1.0e14 — no BIGINT
     * overflow. Collisions across doc_ids are possible (mod 2^31-1), so
-    * every consumer totals the order with a doc_id tie-break.
+    * every consumer totals the order with a doc_id tie-break. Epoch `e`
+    * uses [[epochSeed]](e).
     */
-  private def shuffleKey: org.apache.spark.sql.Column = shuffleKeyAt(0)
-
   private def shuffleKeyAt(epoch: Int): org.apache.spark.sql.Column =
     ((col("doc_id") + lit(epochSeed(epoch))) * lit(48271L) % lit(2147483647L)) *
       lit(48271L) % lit(2147483647L)
@@ -177,7 +176,7 @@ object Curation {
   /** [[chunkWindows]] consuming the SHUFFLED layout — the chunk pass as
     * it actually runs in training (curate → shuffle → pack/chunk): the
     * same distributed PrefixSum cuts 4096-char windows straight through
-    * doc boundaries, but corpus order is [[shuffleKey]]'s epoch
+    * doc boundaries, but corpus order is [[shuffleKeyAt]]'s epoch
     * permutation (single-sourced with [[trainingOrder]], so the declared
     * order and its consumer cannot drift). min/max_doc profile window
     * membership — under a shuffled order there is no "first" doc.

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.sources.RawIngest
+import graft.sources.{RawIngest, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,7 +46,7 @@ object Ingest {
     * parquet bytes natively.
     */
   def ingestRecompress(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(RawIngest.stageRecompressed(s, d))
+    Tables.parquet(s, RawIngest.stageRecompressed(s, d))
       .select(cols: _*).orderBy(col("doc_id"))
 
   /** CSV round-trip: staged RFC-4180 shards → contracted reader. */

@@ -1,11 +1,8 @@
 package graft.queries
 
-import graft.functions.{TextFns, VectorFns}
-import graft.operators.{Dedup, Kmeans, Multimodal, Pq}
 import graft.sources.Tables
 import graft.streaming.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Shared plumbing of the three [[Pipeline]] modules: the documents
   * reader and the DuckDB token-split fragment every oracle builds on.

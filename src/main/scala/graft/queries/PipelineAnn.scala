@@ -1,10 +1,9 @@
 package graft.queries
 
 import graft.MaterializedCaches.persisting
-import graft.functions.{TextFns, VectorFns}
-import graft.operators.{Dedup, Kmeans, Multimodal, Pq}
+import graft.functions.VectorFns
+import graft.operators.{Dedup, Kmeans, Pq}
 import graft.sources.Tables
-import graft.streaming.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -134,7 +133,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     val stats = docs(s, d).agg(count(lit(1)).as("n"),
       sum(when(col("lang") === "en", 1L).otherwise(0L)).as("na")).collect()(0)
     val nShort = (2L * k * stats.getLong(0) / stats.getLong(1)).toInt
-    val shortlist = s.read.parquet(pqIndexPath(s, d))
+    val shortlist = Tables.parquet(s, pqIndexPath(s, d))
       .filter(col("cell").isin(probed.toIndexedSeq: _*))
       .filter(col("vec_id") =!= 0)
       .select(col("vec_id"),
@@ -687,7 +686,6 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
     */
   def ivfPqPruned(s: SparkSession, d: String): DataFrame = {
     val nprobe = 3
-    val emb = Tables.embeddings(s, d)
     val model = kmeansModel(s, d)
     val qv = queryVec(s, d)
     val probed = model.zipWithIndex.map { case (c, cid) =>
@@ -696,7 +694,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
       (dsum, cid)
     }.sorted.take(nprobe).map(_._2)
     val dt = Pq.distTables(pqModel(s, d), model, qv)
-    s.read.parquet(pqIndexPath(s, d))
+    Tables.parquet(s, pqIndexPath(s, d))
       .filter(col("cell").isin(probed.toIndexedSeq: _*))
       .filter(col("vec_id") =!= 0)
       .select(col("vec_id"),
@@ -726,7 +724,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
       (dsum, cid)
     }.sorted.take(nprobe).map(_._2)
     val dt = Pq.distTables(pqModel(s, d), model, qv)
-    val shortlist = s.read.parquet(pqIndexPath(s, d))
+    val shortlist = Tables.parquet(s, pqIndexPath(s, d))
       .filter(col("cell").isin(probed.toIndexedSeq: _*))
       .filter(col("vec_id") =!= 0)
       .select(col("vec_id"),
@@ -842,7 +840,7 @@ private[queries] trait PipelineAnn extends PipelineBase { this: Pipeline.type =>
         ((col("qid") * ncells + col("cell")) * lit(Pq.M * Pq.K) + lit(m * Pq.K)
           + shiftright(col("code32"), 8 * m).bitwiseAND(lit(0xFF))).cast("int") + 1)
     }.reduce(_ + _)
-    val scored = s.read.parquet(pqIndexPath(s, d))
+    val scored = Tables.parquet(s, pqIndexPath(s, d))
       .filter(col("cell").isin(unionCells: _*)) // directory pruning
       .join(broadcast(probes.toDF("qid", "cell")), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))

@@ -1,9 +1,7 @@
 package graft.queries
 
-import graft.functions.{TextFns, VectorFns}
-import graft.operators.{Dedup, Kmeans, Multimodal, Pq}
-import graft.sources.Tables
-import graft.streaming.Sessions
+import graft.functions.TextFns
+import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 

@@ -1,8 +1,7 @@
 package graft.queries
 
 import graft.MaterializedCaches.persistOnce
-import graft.functions.{TextFns, VectorFns}
-import graft.operators.{Dedup, Kmeans, Multimodal, Pq}
+import graft.operators.Multimodal
 import graft.sources.Tables
 import graft.streaming.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}

@@ -2,23 +2,43 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet table loader for the driver testdata layout
   * (`<sfDir>/<name>.parquet`, TESTDATA.md).
   *
-  * All queries go through here so scans stay plain
-  * `spark.read.parquet` — Catalyst handles column pruning and filter
-  * pushdown; nothing is cached or collected at this layer.
+  * All queries go through here, and every scan stays a plain parquet
+  * read, so Catalyst keeps column pruning and filter pushdown. The one
+  * thing held at this layer is each path's schema: it is inferred once
+  * per session and later reads pass it to `spark.read.schema`, which
+  * skips the schema-merge job and footer read that inference costs
+  * (see [[parquet]]). No rows are cached or collected here.
+  *
+  * Staleness caveat: the schema is keyed by (session, path), not by file
+  * content, so a path rewritten with a new schema inside one session is
+  * read with the old schema until [[graft.MaterializedCaches.invalidateAll]].
+  * No current writer reuses a path with a different schema; state
+  * directories that streaming rewrites in place are read uncached.
   */
 object Tables {
+  private val schemas = new graft.SessionCache[StructType]("sources.parquetSchema")
+
+  /** An immutable parquet input at `path`, read with the schema inferred
+    * on its first read in this session. Only for paths that are not
+    * rewritten while the session lives: the testdata tables and the
+    * artifacts a session writes once, before their first read.
+    */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemas.getOrElseUpdate((spark, path), spark.read.parquet(path).schema))
+      .parquet(path)
+
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // let legacy TIMESTAMP(NANOS) footers resolve (as raw int64 nanos)
     // instead of failing the vectorized reader — set HERE, not only in
     // Sessions, so the resolved type of a drifted footer is the same in
     // every session regardless of which query ran first
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
   }
 
   /** Normalize a drifted raw-nanos time column back to a proper

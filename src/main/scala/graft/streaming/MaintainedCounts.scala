@@ -74,6 +74,7 @@ object MaintainedCounts {
       case None => all
     }
     if (dirs.isEmpty) emptyCounts(spark)
+    // not Tables.parquet: a retried batch rewrites its version dirs in place
     else spark.read.parquet(dirs.map(_.toString): _*)
       .select(col("k"), col("c"), col("last_batch"), col("bucket").cast("int"))
   }

@@ -517,6 +517,7 @@ object Sessions {
         val delta = batch.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), sum(col("cents")).as("c"))
           .select(col("event_type").as("dt"), col("n").as("dn"), col("c").as("dc"))
+        // not Tables.parquet: every batch rewrites targetDir in place
         val base =
           try spark.read.parquet(targetDir)
           catch { case _: org.apache.spark.sql.AnalysisException =>

@@ -26,6 +26,7 @@ object Sketches {
   private def stateSchema = new org.apache.spark.sql.types.StructType()
     .add("cand", "string").add("c", "long").add("last_batch", "long")
 
+  // not Tables.parquet: every batch rewrites stateDir in place
   private def readState(spark: SparkSession, stateDir: String): DataFrame =
     try spark.read.parquet(stateDir).select(col("cand"), col("c"), col("last_batch"))
     catch {

@@ -93,7 +93,7 @@ class SharedRewriteSpec extends SparkSuite {
     Quality.bpeMerges(spark, sf0001)
     def held = MaterializedCaches.registered.toMap
     Seq("sessions.sessionTable", "graph.degrees", "graph.hubSeeds",
-        "layout.partitionedOrders", "quality.bpeMerges")
+        "layout.partitionedOrders", "quality.bpeMerges", "sources.parquetSchema")
       .foreach(n => assert(held.getOrElse(n, 0) >= 1, s"$n not held: $held"))
     val dfRdds = MaterializedCaches.allDfs.flatMap(Bridge.cachedRddIds).toSet
     assert(dfRdds.nonEmpty)
@@ -180,5 +180,13 @@ class SharedRewriteSpec extends SparkSuite {
     val offenders = mainSourcesMatching(raw"SparkSession\s*\.\s*builder\b",
       Set("graft/GraftSession.scala", "graft/examples/TopKBench.scala"))
     assert(offenders.isEmpty, s"SparkSession.builder outside GraftSession.scala: $offenders")
+  }
+
+  test("no query reads parquet around the schema cache") {
+    // a plain read of an immutable input infers its schema on every call
+    // (one schema-merge job each); queries read through Tables
+    val offenders = mainSourcesMatching(raw"\.read\.parquet\(", Set.empty)
+      .filter(_.startsWith("graft/queries/"))
+    assert(offenders.isEmpty, s"read.parquet under graft/queries/: $offenders")
   }
 }

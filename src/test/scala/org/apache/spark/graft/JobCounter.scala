@@ -1,6 +1,9 @@
 package org.apache.spark.graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -28,11 +31,24 @@ object JobCounter {
     (out, c.shuffleBytes.get)
   }
 
+  /** The block's result and the name of each job's final stage, in the
+    * order the jobs started (a parquet schema-inference job reads
+    * `parquet at <file>:<line>`).
+    */
+  def jobNames[T](spark: SparkSession)(body: => T): (T, Seq[String]) = {
+    val (out, c) = counted(spark)(body)
+    (out, c.names.asScala.toSeq)
+  }
+
   private final class Counts extends SparkListener {
     val jobs = new AtomicInteger
+    val names = new ConcurrentLinkedQueue[String]
     val shuffleRecords = new AtomicLong
     val shuffleBytes = new AtomicLong
-    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet()
+      e.stageInfos.maxByOption(_.stageId).foreach(st => names.add(st.name))
+    }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
       if (e.taskMetrics != null) {
         shuffleRecords.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
