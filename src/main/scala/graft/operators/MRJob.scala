@@ -1,14 +1,18 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets
+
 import scala.jdk.CollectionConverters._
 import scala.reflect.classTag
 
 import graft.functions.Djb2Partitioner
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.{SerializableWritable, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoders, ExpressionEncoder}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.TaskContext
 
 /** The reference's user-programmable MapReduce surface
   * (`/root/reference/mapreduce.h:44-46`: `MR_Run(files, Mapper, Reducer,
@@ -60,23 +64,26 @@ object MRJob {
     spark.read.textFile(paths: _*)
   }
 
-  /** Whole-file records (the reference schedules one map task per file,
-    * `mapreduce.c:56-75`; use when per-file lineage matters).
+  /** Whole-file records, one per non-empty visible file of `path` (a
+    * directory, or a single file). The reference schedules one map job
+    * per whole file (`mapreduce.c:56-75`); here the files are packed into
+    * `min(files, defaultParallelism)` tasks by size, largest first onto
+    * the least-loaded task, and read whole as UTF-8 like Spark's
+    * `wholetext` scan: malformed bytes become U+FFFD and a codec-named
+    * file (`.gz`) is decompressed.
     */
-  def wholeFiles(spark: SparkSession, dir: String): Dataset[String] = {
-    spark.read.option("wholetext", "true").textFile(dir)
-  }
+  def wholeFiles(spark: SparkSession, path: String): Dataset[String] =
+    spark.createDataset(readFiles(spark, sizeBalanced(spark, path)).map(_._2))(Encoders.STRING)
 
   /** `getline`-exact records (`distwc.c:13-14`): one row per line WITH its
     * trailing `\n` kept, and no `\n` invented for a final unterminated
     * line. A strsep-style mapper over these rows reproduces the
     * reference's token stream byte-for-byte, including the empty token
-    * after each newline (SURVEY.md §1.3).
+    * after each newline (SURVEY.md §1.3). Read as [[wholeFiles]] reads.
     */
-  def getlines(spark: SparkSession, dir: String): Dataset[String] = {
-    import spark.implicits._
-    wholeFiles(spark, dir).flatMap(getlineRecords)
-  }
+  def getlines(spark: SparkSession, path: String): Dataset[String] =
+    spark.createDataset(readFiles(spark, sizeBalanced(spark, path))
+      .flatMap(f => getlineRecords(f._2)))(Encoders.STRING)
 
   /** One whole-file record cut after each `\n`, the `\n` kept; a final
     * unterminated line is its own record and an empty file yields none.
@@ -98,45 +105,92 @@ object MRJob {
   /** A11 — shortest-job-first task ordering (`mapreduce.c:24-29,55-71`:
     * stat each input file, qsort ascending by size, enqueue one map job
     * per file). Re-expressed at the same layer the reference does it —
-    * the FILE-LIST scan: list + stat the directory, sort ascending by
+    * the FILE-LIST scan: list + stat the input, sort ascending by
     * (size, path), and schedule EXACTLY one task per file with the
     * partition INDEX equal to the SJF rank (Spark's scheduler launches
     * ready partitions in index order, so with fewer slots than files the
     * smallest files run first, like the reference's thread pool dequeue).
     * Returns (path, content) so any whole-file mapper composes on top.
     *
-    * Scale honesty, both directions: one-task-per-file is the
-    * reference's own granularity and only right when files are many and
-    * small (the regime SJF targets); for big splittable files Spark's
-    * native scan is strictly better — and its planner already applies
-    * the OPPOSITE heuristic (largest-first bin-packing of splits, the
-    * stronger makespan bound when tasks run in parallel rather than
-    * from a shared queue). This operator exists for MR-shim parity, not
-    * as the recommended 100 TB read path.
+    * Scale honesty: one task per file is the reference's own granularity
+    * and only right when files are many and small (the regime SJF
+    * targets). With parallel slots rather than a shared queue, the
+    * makespan is set by the heaviest task, which is what [[wholeFiles]]
+    * and [[getlines]] balance by bytes instead. Spark's own `wholetext`
+    * scan does not: it sorts files largest first and fills each task up
+    * to a byte budget that counts each file as its length plus a 4 MB
+    * open cost, so files well under 4 MB are packed by count and the
+    * first task takes the largest quarter of them. On the `wc`
+    * benchmark's corpora at 4 cores that task held 49-65 % of the bytes
+    * (per-task shares 0.59/0.24/0.14/0.02 on the paper corpus and
+    * 0.65/0.23/0.09/0.03 on the Zipf corpus, seed 201). This operator
+    * exists for MR-shim parity, not as the recommended read path.
     */
   def sjfFiles(spark: SparkSession, dir: String): Dataset[(String, String)] = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val ascending = listFiles(spark, dir).sortBy { case (path, len) => (len, path) }
+    spark.createDataset(readFiles(spark, ascending.map { case (path, _) => Seq(path) }))
+  }
+
+  /** The files of `path` that Spark's file scan reads, as (path, length):
+    * a directory's non-empty files, skipping names that start with `_`
+    * or `.` as Spark's file index does (`_SUCCESS`, `.part-0.crc`), or
+    * `path` itself when it is a non-empty file.
+    */
+  private def listFiles(spark: SparkSession, path: String): Seq[(String, Long)] = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val paths = fs.listStatus(p).filter(_.isFile)
-      .map(f => (f.getPath.toString, f.getLen))
-      .sortBy { case (path, len) => (len, path) } // total order: size, then path
-      .map(_._1).toSeq
-    spark.sparkContext
-      .parallelize(paths, math.max(1, paths.length))
-      .map { path =>
-        // tasks re-derive the FS from the path URI (a Configuration is
-        // not serializable; defaults cover file:// and cluster-default
-        // remote schemes)
-        val hp = new org.apache.hadoop.fs.Path(path)
-        val hfs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        val in = hfs.open(hp)
-        try {
-          val out = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-          (path, new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8))
-        } finally in.close()
-      }.toDS()
+    val status = fs.getFileStatus(p)
+    val files = if (!status.isDirectory) Seq(status) else fs.listStatus(p).toSeq.filter { f =>
+      val name = f.getPath.getName
+      f.isFile && !name.startsWith("_") && !name.startsWith(".")
+    }
+    files.filter(_.getLen > 0).map(f => (f.getPath.toString, f.getLen))
+  }
+
+  /** `path`'s files packed into `min(files, defaultParallelism)` bins,
+    * largest first onto the least-loaded bin (LPT), so the heaviest bin
+    * holds at most total / bins + the largest file.
+    */
+  private def sizeBalanced(spark: SparkSession, path: String): Seq[Seq[String]] =
+    lptBins(listFiles(spark, path), spark.sparkContext.defaultParallelism)
+
+  /** LPT over at most `slots` bins; a min-heap of (bytes, bin) picks the
+    * least-loaded bin.
+    */
+  private[graft] def lptBins(files: Seq[(String, Long)], slots: Int): Seq[Seq[String]] = {
+    val n = math.min(files.size, slots)
+    val bins = Array.fill(n)(List.empty[String])
+    val heap = scala.collection.mutable.PriorityQueue.tabulate(n)(b => (0L, b))(
+      Ordering[(Long, Int)].reverse)
+    files.sortBy { case (path, len) => (-len, path) }.foreach { case (path, len) =>
+      val (bytes, b) = heap.dequeue()
+      bins(b) = path :: bins(b)
+      heap.enqueue((bytes + len, b))
+    }
+    bins.toSeq.map(_.reverse)
+  }
+
+  /** Reads each bin as one task, bin i in partition i: its files whole, as
+    * (path, content) decoded like Spark's `wholetext` scan decodes them.
+    * Tasks open files with the session's Hadoop configuration, broadcast
+    * once per call as Spark's file scans ship it: a configuration inside
+    * each task's closure costs a `Configuration` to deserialize per task
+    * (about 20 ms each, more than reading a 1 MB bin).
+    */
+  private def readFiles(spark: SparkSession, bins: Seq[Seq[String]]): RDD[(String, String)] = {
+    val sc = spark.sparkContext
+    val conf = sc.broadcast(new SerializableWritable(sc.hadoopConfiguration))
+    sc.parallelize(bins, math.max(1, bins.size)).mapPartitions { it =>
+      val hadoopConf = conf.value.value
+      val codecs = new CompressionCodecFactory(hadoopConf)
+      it.flatten.map { path =>
+        val p = new Path(path)
+        val raw = p.getFileSystem(hadoopConf).open(p)
+        val in = Option(codecs.getCodec(p)).fold[java.io.InputStream](raw)(_.createInputStream(raw))
+        try (path, new String(in.readAllBytes(), StandardCharsets.UTF_8)) finally in.close()
+      }
+    }
   }
 
   /** Buffered values (`run`) or distinct keys (`runAgg`) at which a map
@@ -153,13 +207,11 @@ object MRJob {
     * so a count job's `"1"` emits ship as one pair per key and flush. The
     * reduce side repeats each value `count` times, so the reducer still
     * sees every emitted value, in unspecified order as in the reference.
-    * `kv` is unused and kept for source compatibility.
     */
   def run[K: Encoder, V: Encoder, OUT: Encoder](
       input: Dataset[String],
       mapper: String => IterableOnce[(K, V)],
-      reducer: (K, Iterator[V]) => OUT)(
-      implicit kv: Encoder[(K, V)]): Dataset[OUT] = {
+      reducer: (K, Iterator[V]) => OUT): Dataset[OUT] = {
     val runs: Encoder[Seq[(V, Int)]] = ExpressionEncoder(AgnosticEncoders.IterableEncoder(
       classTag[Seq[(V, Int)]],
       AgnosticEncoders.agnosticEncoderFor(Encoders.tuple(implicitly[Encoder[V]], Encoders.scalaInt)),
@@ -182,14 +234,12 @@ object MRJob {
     * with `finish`. Prefer this over [[run]] whenever the reduction is
     * associative (the reference's count reducer is; see
     * [[MRAggregators.CountValues]]): the shuffle then carries one buffer,
-    * not a list of values, per key and flush. `kv` is unused and kept
-    * for source compatibility.
+    * not a list of values, per key and flush.
     */
   def runAgg[K: Encoder, V: Encoder, B, OUT](
       input: Dataset[String],
       mapper: String => IterableOnce[(K, V)],
-      reducer: Aggregator[V, B, OUT])(
-      implicit kv: Encoder[(K, V)], kout: Encoder[(K, OUT)]): Dataset[(K, OUT)] =
+      reducer: Aggregator[V, B, OUT]): Dataset[(K, OUT)] =
     input
       .mapPartitions(lines => new InMapperCombiner[K, V, B](
         lines, mapper, () => reducer.zero, reducer.reduce, perValue = false))(
@@ -208,8 +258,7 @@ object MRJob {
       spark: SparkSession,
       inputDir: String,
       mapper: String => IterableOnce[(K, V)],
-      reducer: Aggregator[V, B, OUT])(
-      implicit kv: Encoder[(K, V)], kout: Encoder[(K, OUT)]): Dataset[(K, OUT)] =
+      reducer: Aggregator[V, B, OUT]): Dataset[(K, OUT)] =
     runAgg(spark.readStream.text(inputDir).as(Encoders.STRING), mapper, reducer)
 
   /** The reference's shuffle (`mapreduce.c:113,123-141`) as one Spark
@@ -299,20 +348,22 @@ private final class InMapperCombiner[K, V, B](
 
 /** [[MRJob.run]]'s buffer of one key's values in one flush, run-length
   * encoded: `add` extends the last run when the value is the same value
-  * as the run's, and starts a new run otherwise.
+  * as the run's, and starts a new run otherwise. Finished runs are
+  * prepended to a list, so `result` hands them out newest first without
+  * a copy (the reducer's value order is unspecified).
   */
 private final class ValueRuns[V] {
-  private val runs = scala.collection.mutable.ArrayBuffer.empty[(V, Int)]
+  private var runs: List[(V, Int)] = Nil
   private var last: V = _
   private var count = 0
 
   def add(v: V): ValueRuns[V] = {
     if (count > 0 && ValueRuns.same(last, v)) count += 1
-    else { if (count > 0) runs += ((last, count)); last = v; count = 1 }
+    else { if (count > 0) runs = (last, count) :: runs; last = v; count = 1 }
     this
   }
 
-  def result(): Seq[(V, Int)] = { if (count > 0) runs += ((last, count)); count = 0; runs.toSeq }
+  def result(): Seq[(V, Int)] = { if (count > 0) runs = (last, count) :: runs; count = 0; runs }
 }
 
 private object ValueRuns {

@@ -321,6 +321,72 @@ class MRJobSpec extends SparkSuite {
     assert(e.getCause.getMessage == "upstream", e.getMessage)
   }
 
+  /** Spark's `wholetext` scan, the oracle the whole-file reader must match. */
+  private def wholetextOracle(path: String): Seq[String] =
+    spark.read.option("wholetext", "true").textFile(path).collect().toSeq
+
+  private def sameMultiset(got: Seq[String], want: Seq[String]): Unit =
+    assert(got.sorted == want.sorted, s"got ${got.size} records, want ${want.size}")
+
+  /** A directory holding the cases a whole-file reader can get wrong:
+    * an empty file, no final newline, multi-byte and malformed UTF-8, a
+    * gzip file, a file written through Hadoop's local file system (so a
+    * `.x.crc` checksum sits beside it) and a `_SUCCESS` marker.
+    */
+  private def edgeCaseDir: String = {
+    val dir = Files.createTempDirectory("graft-wholefiles")
+    Files.write(dir.resolve("empty.txt"), Array.emptyByteArray)
+    Files.writeString(dir.resolve("nofinal.txt"), "a b\nc")
+    Files.write(dir.resolve("multibyte.txt"), "\u00e9t\u00e9 \ud83d\ude00\n\u65e5\u672c\n".getBytes(UTF_8))
+    // a lone continuation byte, an invalid lead, and a truncated 3-byte sequence at the end
+    Files.write(dir.resolve("malformed.txt"),
+      Array(0x61, 0x80, 0x0a, 0xff, 0xfe, 0x62, 0x0a, 0xe2, 0x82).map(_.toByte))
+    val gz = new java.util.zip.GZIPOutputStream(Files.newOutputStream(dir.resolve("packed.gz")))
+    try gz.write("gz line\nsecond".getBytes(UTF_8)) finally gz.close()
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val x = local.create(new org.apache.hadoop.fs.Path(dir.resolve("x").toUri))
+    try x.write("checksummed\n".getBytes(UTF_8)) finally x.close()
+    Files.writeString(dir.resolve("_SUCCESS"), "")
+    assert(Files.exists(dir.resolve(".x.crc")))
+    dir.toString
+  }
+
+  test("wholeFiles and getlines read like Spark's wholetext scan") {
+    Seq(ReferenceCorpus.dir, edgeCaseDir).foreach { dir =>
+      val oracle = wholetextOracle(dir)
+      sameMultiset(MRJob.wholeFiles(spark, dir).collect().toSeq, oracle)
+      sameMultiset(MRJob.getlines(spark, dir).collect().toSeq, oracle.flatMap(MRJob.getlineRecords))
+    }
+    val edge = MRJob.wholeFiles(spark, edgeCaseDir).collect().toSet
+    assert(edge.contains("a\ufffd\n\ufffd\ufffdb\n\ufffd") && edge.contains("gz line\nsecond"), edge)
+  }
+
+  test("wholeFiles and getlines read a single file") {
+    val file = Paths.get(edgeCaseDir, "multibyte.txt").toString
+    assert(MRJob.wholeFiles(spark, file).collect().toSeq == wholetextOracle(file))
+    assert(MRJob.getlines(spark, file).collect().toSeq == Seq("\u00e9t\u00e9 \ud83d\ude00\n", "\u65e5\u672c\n"))
+  }
+
+  test("wholeFiles packs files by bytes: min(files, slots) tasks, the heaviest within total/n + largest") {
+    val slots = spark.sparkContext.defaultParallelism
+    val rnd = new scala.util.Random(3)
+    // skewed sizes, as in the benchmark's Zipf corpus: a few large files, many small ones
+    val sizes = Seq(40000, 25000, 9000) ++ Seq.fill(20)(100 + rnd.nextInt(3000))
+    val dir = Files.createTempDirectory("graft-lpt")
+    sizes.zipWithIndex.foreach { case (n, i) => Files.writeString(dir.resolve(f"f$i%02d.txt"), "w" * n) }
+    Seq(dir.toString -> sizes, dir.resolve("f00.txt").toString -> sizes.take(1)).foreach {
+      case (path, want) =>
+        val rdd = MRJob.wholeFiles(spark, path).rdd
+        val n = math.min(want.size, slots)
+        assert(rdd.getNumPartitions == n, path)
+        val loads = rdd.mapPartitions(it => Iterator(it.map(_.length.toLong).sum)).collect()
+        assert(loads.sum == want.sum)
+        assert(loads.max <= want.sum.toDouble / n + want.max, loads.toSeq)
+    }
+    assert(MRJob.lptBins(Seq("a" -> 3L, "b" -> 2L, "c" -> 2L, "d" -> 2L), 2) ==
+      Seq(Seq("a", "d"), Seq("b", "c")))
+  }
+
   test("A11 sjfFiles: one task per file, partition index = ascending-size rank") {
     val dir = Files.createTempDirectory("graft-sjf").toString
     // sizes deliberately NOT in name order: c < a < b
@@ -338,11 +404,10 @@ class MRJobSpec extends SparkSuite {
     // content fidelity: byte-for-byte what the files hold
     val byName = ds.collect().map { case (p, s) => p.split("/").last -> s }.toMap
     assert(byName("c.txt") == "z" && byName("a.txt") == "x " * 50)
-    // and the reference corpus reads identically through SJF and the
-    // native whole-file scan (multiset of contents, order aside)
-    val ref = ReferenceCorpus.dir
-    val sjf = graft.operators.MRJob.sjfFiles(spark, ref).collect().map(_._2).sorted
-    val native = graft.operators.MRJob.wholeFiles(spark, ref).collect().sorted
-    assert(sjf.toSeq == native.toSeq)
+    // and the reference corpus and the edge cases read identically through
+    // SJF and Spark's wholetext scan (multiset of contents, order aside)
+    Seq(ReferenceCorpus.dir, edgeCaseDir).foreach { d =>
+      sameMultiset(graft.operators.MRJob.sjfFiles(spark, d).collect().map(_._2).toSeq, wholetextOracle(d))
+    }
   }
 }

@@ -13,7 +13,13 @@ median and quartiles, the number of pairs B wins (ties, and pairs where a
 side failed, count for neither side), and whether B's gain holds by the
 rule the benchmark's gain claims follow: B wins at least nine tenths of
 all pairs run, the medians differ by more than A's interquartile
-distance, and B failed no more runs than A.
+distance, and B failed no more runs than A.  It then prints, per
+operation, each side's median latency (the median over the pairs of each
+run's median sample), B's median over A's, and the number of pairs B wins,
+from the ``samples`` of each run's
+``.bench_build/work/<workload>-<seed>-t0/result.json``; this names the
+operations a change moved.  The gain rule reads only the end-to-end
+metrics.
 
 Each tree builds itself on its first run (``.bench_build/`` in that tree);
 the build is not timed.  This script only calls ``perfbench/run.py``.
@@ -29,7 +35,8 @@ import time
 
 
 def run_once(tree, workload, seed, seconds):
-    """One untraced benchmark run in ``tree``; its result line, or None."""
+    """One untraced benchmark run in ``tree``: its result line, with each
+    operation's median latency added under ``op_medians``; or None."""
     cmd = [sys.executable, os.path.join(tree, "perfbench", "run.py"), "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
@@ -37,7 +44,22 @@ def run_once(tree, workload, seed, seconds):
         print(f"  {tree} seed {seed}: exit {p.returncode}: {p.stderr.strip()[-500:]}",
               file=sys.stderr)
         return None
-    return json.loads(p.stdout.strip().splitlines()[-1])
+    res = json.loads(p.stdout.strip().splitlines()[-1])
+    res["op_medians"] = op_medians(tree, workload, seed)
+    return res
+
+
+def op_medians(tree, workload, seed):
+    """Median latency of each operation's successful samples in the run's
+    ``result.json`` (samples are ``[name, module, latency_s, ok]``)."""
+    with open(os.path.join(tree, ".bench_build", "work", f"{workload}-{seed}-t0",
+                           "result.json")) as f:
+        samples = json.load(f)["samples"]
+    by_op = {}
+    for name, _, lat, ok in samples:
+        if ok:
+            by_op.setdefault(name, []).append(lat)
+    return {name: statistics.median(lats) for name, lats in by_op.items()}
 
 
 def quartiles(xs):
@@ -91,6 +113,18 @@ def main():
         print(f"{name:<14}{'A':>5}{a1:>11.4g}{am:>11.4g}{a3:>11.4g}")
         print(f"{'':<14}{'B':>5}{b1:>11.4g}{bm:>11.4g}{b3:>11.4g}"
               f"{f'{wins}/{len(pairs)}':>8}{'yes' if holds else 'no':>14}")
+
+    ops = sorted({op for p in done for op in p["A"]["op_medians"]})
+    print(f"\n{'operation':<22}{'A median':>11}{'B median':>11}{'B/A':>8}{'B wins':>8}")
+    for op in ops:
+        both = [(p["A"]["op_medians"][op], p["B"]["op_medians"][op]) for p in done
+                if op in p["A"]["op_medians"] and op in p["B"]["op_medians"]]
+        if not both:
+            continue
+        am = statistics.median(x for x, _ in both)
+        bm = statistics.median(b for _, b in both)
+        wins = sum(b < x for x, b in both)
+        print(f"{op:<22}{am:>11.4g}{bm:>11.4g}{bm / am:>8.3f}{f'{wins}/{len(both)}':>8}")
 
 
 if __name__ == "__main__":
